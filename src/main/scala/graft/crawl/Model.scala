@@ -65,18 +65,10 @@ case class CrawlConfig(
       * 10^10 path — shuffle-hash-join the shard table on shardId so each
       * shard's bits travel once to its reducer (Seen.filterNew §4.10). */
     broadcastBloomProbe: Boolean = true,
-    /** true (default): the durable pages commit IS the fused fetch pass's
-      * materializing action — the round's widest data crosses the box once
-      * (the parquet write) and downstream consumers read column-pruned
-      * slices of the committed scan. false: the pre-write-once path
-      * (block-store persist during the fetch wave + a separate pages
-      * commit re-reading it) — kept selectable for A/B measurement and
-      * parity tests; the two paths are byte-identical (KillResumeSpec). */
-    writeOncePages: Boolean = true,
     /** Parquet codec for the pages table (the store's bulk bytes — state
       * tables are narrow). None = session default (snappy): fastest wall
       * on a single box. "zstd" writes ~1.9× fewer bytes at 2–3× encoder
-      * CPU (WriteBench A/B, BENCH/BASELINE.md round 5) — the right
+      * CPU (round-5 codec A/B, BENCH/BASELINE.md) — the right
       * default on a cluster where page bytes hit real storage. */
     pagesCodec: Option[String] = None,
     /** Hash-bucket count for the durable frontier/seen/failed tables

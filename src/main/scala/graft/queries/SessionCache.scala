@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -34,16 +35,17 @@ object SessionCache {
     * SparkContext). */
   def df(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val sk = sessionKey(s)
-    // Cached plans are compiled with AQE's runtime re-optimization disabled
-    // unless this is on (Spark keeps it off by default only to preserve the
-    // output partitioning some callers expect). Every memo here is consumed
-    // through joins/aggregations that re-shuffle anyway, so let the cached
-    // pipeline keep AQE (coalescing, runtime join selection) instead of
-    // paying fixed-width stage waves at materialization.
-    try s.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    catch { case _: Throwable => () }
     if (hooked.add(sk)) {
+      // Once per session, before its first memo is built: cached plans are
+      // compiled with AQE's runtime re-optimization disabled unless this is
+      // on (Spark keeps it off by default only to preserve the output
+      // partitioning some callers expect). Every memo here is consumed
+      // through joins/aggregations that re-shuffle anyway, so let the
+      // cached pipeline keep AQE (coalescing, runtime join selection)
+      // instead of paying fixed-width stage waves at materialization.
+      try s.conf.set(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      catch { case NonFatal(_) => () }
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
           invalidateKey(sk, unhook = true)
@@ -64,7 +66,7 @@ object SessionCache {
       val built = build.persist()
       val prev = cache.putIfAbsent(k, built)
       if (prev != null) {
-        try built.unpersist(false) catch { case _: Throwable => () }
+        try built.unpersist(false) catch { case NonFatal(_) => () }
         prev
       } else built
     }
@@ -85,7 +87,7 @@ object SessionCache {
     cache.keySet.asScala.filter(_._1 == sk).toSeq.foreach { k =>
       Option(cache.remove(k)).foreach { d =>
         // blocking=false, and a stopped context just no-ops
-        try d.unpersist(false) catch { case _: Throwable => () }
+        try d.unpersist(false) catch { case NonFatal(_) => () }
       }
     }
     if (unhook) hooked.remove(sk)

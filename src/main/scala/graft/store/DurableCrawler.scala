@@ -337,20 +337,14 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       // (CrawlRound.fetchSink) — the committed version holds the FULL
       // fetch output (all statuses + links + priority), downstream round
       // logic and the corpus read paths consume column-pruned /
-      // status-filtered projections of the committed scan. Before this,
-      // the same bytes crossed the box twice per round: a block-store
-      // persist during the fetch wave, then pages.commit re-reading it.
-      // cfg.writeOncePages = false selects that legacy path (A/B bench +
-      // byte-identical parity pinned in KillResumeSpec).
+      // status-filtered projections of the committed scan, so the round's
+      // widest data crosses the box once.
       var committedPagesV = -1L
-      val sink: Option[DataFrame => DataFrame] =
-        if (!cfg.writeOncePages) None
-        else Some { df =>
+      val res = CrawlRound.run(spark, state, robots, budgets, defaultBudget,
+        fetcher, r, cfg, fetchSink = Some { df =>
           committedPagesV = pages.commit(df)
           pages.read(committedPagesV)
-        }
-      val res = CrawlRound.run(spark, state, robots, budgets, defaultBudget,
-        fetcher, r, cfg, fetchSink = sink)
+        })
       if (res.nPopped == 0) { continue = false }
       else {
         // The seven table commits are independent single-writer snapshots —
@@ -372,9 +366,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
           else Future(table.commit(df))
         val spF = res.state.spilled.map(df =>
           commitOrReuse(df, state.spilled.orNull, spilled, prevEntry.spilledV))
-        val pvF: Future[Long] =
-          if (cfg.writeOncePages) Future.successful(committedPagesV)
-          else Future(pages.commit(res.pages)) // legacy: re-read the persist
         // The lineage job CHAINS AFTER the frontier commit instead of
         // racing it: both force the round's expansion/dedup chain through
         // the same unmaterialized persists, and Spark does not coordinate
@@ -387,17 +378,17 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
         // wave — the other table commits overlap the chain.
         val fvF = Future(frontier.commit(res.state.frontier))
         val lvF = fvF.map(_ => lineage.commit(lineageDf(res, r)))
-        val Seq(sv, shv, flv, ckv, pv) = Await.result(Future.sequence(Seq(
+        val Seq(sv, shv, flv, ckv) = Await.result(Future.sequence(Seq(
           Future(seen.commit(res.state.seenExact)),
           Future(shards.commit(res.state.bloomShards)),
           commitOrReuse(res.state.failed, state.failed, failed, prevEntry.failedV),
-          commitOrReuse(res.state.cuckooShards, state.cuckooShards, cuckoo, prevEntry.cuckooV),
-          pvF)), Duration.Inf)
+          commitOrReuse(res.state.cuckooShards, state.cuckooShards, cuckoo, prevEntry.cuckooV))),
+          Duration.Inf)
         val fv = Await.result(fvF, Duration.Inf)
         val lv = Await.result(lvF, Duration.Inf)
         val spv = spF.map(Await.result(_, Duration.Inf)).getOrElse(Long.MinValue)
         val e = RoundEntry(r, frontierV = fv, seenV = sv, shardsV = shv,
-          failedV = flv, cuckooV = ckv, pagesV = pv, lineageV = lv,
+          failedV = flv, cuckooV = ckv, pagesV = committedPagesV, lineageV = lv,
           spilledV = spv, frontierSize = res.state.frontierSize,
           spilledSize = res.state.spilledSize,
           failedSize = res.state.failedSize,
@@ -690,8 +681,9 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
 
   /** The persisted web graph as (src, dst) urlHash edges — derived lazily
     * from the retained page versions that carry the `links` column (every
-    * write-once round; legacy filtered-projection versions stored no links
-    * and contribute no edges). None when no retained version has links. */
+    * round's full fetch log; versions from stores written before the
+    * write-once commit hold the filtered projection, no links, and
+    * contribute no edges). None when no retained version has links. */
   def linkEdges(): Option[DataFrame] =
     lastCompleteRound.filter(_ >= 0).flatMap { last =>
       versionRounds(math.max(0, oldestRetainedRound.get), last).flatMap { case (v, rs) =>

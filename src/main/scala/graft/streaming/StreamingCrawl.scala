@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.crawl.FrontierEntry
 
@@ -40,11 +40,11 @@ object StreamingCrawl {
   case class HostLedger(emitted: Long)
 
   /** Top-k of a group by (priority DESC, urlHash ASC) in O(k) memory — the
-    * selection kernel both politeness implementations share. Deterministic
-    * order within the trigger — never arrival order — via a BOUNDED heap:
-    * a mega-host group streams through in O(budget) memory instead of
-    * materializing (it.toSeq would hold the whole group, and one hot host
-    * can be most of a trigger). */
+    * politeness gate's selection kernel. Deterministic order within the
+    * trigger — never arrival order — via a BOUNDED heap: a mega-host group
+    * streams through in O(budget) memory instead of materializing (it.toSeq
+    * would hold the whole group, and one hot host can be most of a
+    * trigger). */
   private def selectTopK(it: Iterator[FrontierEntry], k: Int): Seq[FrontierEntry] =
     if (k <= 0) Seq.empty
     else {
@@ -60,13 +60,6 @@ object StreamingCrawl {
       }
       pq.dequeueAll.reverse.toSeq
     }
-
-  /** Shared headroom policy: per-trigger budget, optionally capped by the
-    * whole-stream per-host total. */
-  private def headroomFor(used: Long, budgetPerTrigger: Int,
-                          maxTotalPerHost: Long): Int =
-    (if (maxTotalPerHost < 0) budgetPerTrigger.toLong
-     else budgetPerTrigger.toLong.min((maxTotalPerHost - used).max(0L))).toInt
 
   /** The politeness gate: per host, emit at most `budgetPerTrigger` entries
     * per micro-batch, highest (priority, then urlHash) first — the same
@@ -84,47 +77,12 @@ object StreamingCrawl {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (host: String, it: Iterator[FrontierEntry], state: GroupState[HostLedger]) =>
           val used = state.getOption.map(_.emitted).getOrElse(0L)
-          val take = selectTopK(it, headroomFor(used, budgetPerTrigger, maxTotalPerHost))
+          val headroom =
+            if (maxTotalPerHost < 0) budgetPerTrigger
+            else budgetPerTrigger.toLong.min((maxTotalPerHost - used).max(0L)).toInt
+          val take = selectTopK(it, headroom)
           state.update(HostLedger(used + take.size))
           take.iterator
       }
-  }
-
-  /** The politeness gate on `transformWithState` — Spark 4.x's sanctioned
-    * successor of flatMapGroupsWithState (typed per-key state handles,
-    * RocksDB-backed, timers, schema evolution). Identical semantics to
-    * [[politenessGate]]: same selection kernel, same ledger policy —
-    * StreamingCrawlSpec runs its scenarios against BOTH implementations.
-    * Requires the RocksDB state-store provider
-    * (`spark.sql.streaming.stateStore.providerClass`) in streaming mode. */
-  def politenessGateTws(entries: Dataset[FrontierEntry],
-                        budgetPerTrigger: Int,
-                        maxTotalPerHost: Long = -1L): Dataset[FrontierEntry] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    entries
-      .groupByKey(_.host)
-      .transformWithState(
-        new PolitenessProcessor(budgetPerTrigger, maxTotalPerHost),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Per-host politeness as a StatefulProcessor: the cumulative emitted
-    * count lives in a named ValueState handle instead of the single opaque
-    * GroupState blob. */
-  class PolitenessProcessor(budgetPerTrigger: Int, maxTotalPerHost: Long)
-      extends StatefulProcessor[String, FrontierEntry, FrontierEntry] {
-    @transient private var ledger: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      ledger = getHandle.getValueState[Long]("ledger", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(host: String, rows: Iterator[FrontierEntry],
-                                 timerValues: TimerValues): Iterator[FrontierEntry] = {
-      val used = if (ledger.exists()) ledger.get() else 0L
-      val take = selectTopK(rows, headroomFor(used, budgetPerTrigger, maxTotalPerHost))
-      ledger.update(used + take.size)
-      take.iterator
-    }
   }
 }

@@ -52,4 +52,15 @@ class SessionCacheSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftSqlBridge.fireApplicationEnd(spark)
     assert(SessionCache.sizeFor(spark) == 0)
   }
+
+  test("the AQE cached-plan conf is set once per session, not on every memo call") {
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    SessionCache.df(spark, "sc-spec-conf-a") { spark.range(4).toDF() }
+    assert(spark.conf.get(key) == "true")
+    try {
+      spark.conf.set(key, "false")
+      SessionCache.df(spark, "sc-spec-conf-b") { spark.range(4).toDF() }
+      assert(spark.conf.get(key) == "false", "a later memo call must not reset the conf")
+    } finally spark.conf.set(key, "true")
+  }
 }

@@ -157,43 +157,6 @@ class KillResumeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("format 99"))
   }
 
-  test("write-once pages commit is byte-identical to the legacy persist+commit path") {
-    val (budgets, default) = budgetsAndDefault
-
-    val rootW = Files.createTempDirectory("crawlWO").toString
-    val w = new DurableCrawler(spark, rootW, CrawlFixture.cfg) // writeOncePages = true (default)
-    w.init(seeds, robots)
-    w.runRounds(3, fetcher, robots, budgets, default)
-
-    val rootL = Files.createTempDirectory("crawlLP").toString
-    val l = new DurableCrawler(spark, rootL,
-      CrawlFixture.cfg.copy(writeOncePages = false))
-    l.init(seeds, robots)
-    l.runRounds(3, fetcher, robots, budgets, default)
-
-    val stW = w.currentState(); val stL = l.currentState()
-    assert(sortedRows(stW.frontier) == sortedRows(stL.frontier))
-    assert(sortedRows(stW.seenExact) == sortedRows(stL.seenExact))
-    // pages: identical corpus view despite different STORED shapes (full
-    // fetch log vs filtered projection) — pageView must erase the gap
-    assert(w.allPages().get.columns.sorted.toSeq ==
-      l.allPages().get.columns.sorted.toSeq)
-    assert(sortedRows(w.allPages().get.drop("metrics")) ==
-      sortedRows(l.allPages().get.drop("metrics")))
-    assert(sortedRows(w.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")) ==
-      sortedRows(l.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")))
-    // and the sliced read agrees across formats too
-    assert(sortedRows(w.pagesInRounds(1, 2).get.drop("metrics")) ==
-      sortedRows(l.pagesInRounds(1, 2).get.drop("metrics")))
-    // lineage TOTALS identical (same logical counts; the per-partition
-    // rows are keyed by physical partition id, which legitimately differs
-    // between a parquet read-back and a block-store persist — each path's
-    // partition rows still sum to its totals, pinned by the lineage test)
-    for (r <- 0 to 3)
-      assert(sortedRows(w.lineageAt(r).filter("partitionId = -1")) ==
-        sortedRows(l.lineageAt(r).filter("partitionId = -1")))
-  }
-
   test("durable run reproduces the in-memory crawler's seen set") {
     val (budgets, default) = budgetsAndDefault
     val root = Files.createTempDirectory("crawlC").toString

@@ -60,30 +60,46 @@ class RoundSliceSpec extends AnyFunSuite {
       df.selectExpr(df.columns.sorted.toSeq: _*).collect().map(_.toString).sorted.toSeq
     val expectAll = rows(crawler.allPages().get)
     val expectR0 = rows(crawler.pagesInRounds(0, 0).get)
+    val expectR1 = rows(crawler.pagesInRounds(1, 1).get)
+    val edgesAll = rows(crawler.linkEdges().get)
+    val v1 = crawler.pagesVersionAt(1)
+    val edgesR1 = rows(graft.crawl.LinkGraph.edges(crawler.pages.read(v1)))
+    assert(edgesR1.nonEmpty, "round 1 must carry links for the edge check to bite")
 
-    // Simulate round 0 having been committed by a build that predates the
-    // fetchRound column: commit a column-less copy as a new pages version
-    // and point round-0.json's pagesV at it (the round log is the only
-    // reference — data-file immutability is preserved).
-    val v0 = crawler.pagesVersionAt(0)
-    val legacy = crawler.pages.read(v0).drop("fetchRound")
-    val legacyV = crawler.pages.commit(legacy)
-    val p = java.nio.file.Paths.get(crawler.root, "roundlog", "round-0.json")
+    // Old-store shapes, each committed as a new pages version that the
+    // round log's pagesV is repointed at (the round log is the only
+    // reference — data-file immutability is preserved):
+    //  - round 0 as written by a build that predates the fetchRound column
+    //    (a column-less copy);
+    //  - round 1 as written before the write-once commit: the filtered
+    //    projection (status 200, the 12 page columns, no links).
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(Files.readString(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    n.put("pagesV", legacyV)
-    Files.writeString(p, n.toString)
+    def repoint(round: Int, v: Long): Unit = {
+      val p = java.nio.file.Paths.get(crawler.root, "roundlog", s"round-$round.json")
+      val n = mapper.readTree(Files.readString(p))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      n.put("pagesV", v)
+      Files.writeString(p, n.toString)
+    }
+    repoint(0, crawler.pages.commit(
+      crawler.pages.read(crawler.pagesVersionAt(0)).drop("fetchRound")))
+    repoint(1, crawler.pages.commit(crawler.pages.read(v1)
+      .filter(col("status") === 200)
+      .select(Seq("url", "urlHash", "host", "depth", "round", "fetchRound", "popRank",
+        "status", "fetchTs", "lang", "itemText", "metrics").map(col): _*)))
 
-    // allPages: the legacy version unions with new-format rounds (no
+    // allPages: the old versions union with new-format rounds (no
     // AnalysisException), fetchRound coalesced from the round-log round.
-    val all2 = crawler.allPages().get
-    assert(rows(all2) == expectAll)
-    // pagesInRounds: whole-version selection for the legacy round — exact.
+    assert(rows(crawler.allPages().get) == expectAll)
+    // pagesInRounds: whole-version selection for the column-less round,
+    // the usual file prune for the projected one — both exact.
     val r0 = crawler.pagesInRounds(0, 0).get
     assert(rows(r0) == expectR0)
     assert(r0.select("fetchRound").distinct().collect().map(_.getInt(0)).toSeq == Seq(0))
-    // a slice excluding round 0 must not read the legacy version at all
+    assert(rows(crawler.pagesInRounds(1, 1).get) == expectR1)
+    // a slice excluding round 0 must not read the column-less version at all
     assert(crawler.pagesInRounds(1, 2).get.filter(col("fetchRound") === 0).count() == 0)
+    // linkEdges skips the link-less version: exactly round 1's edges drop
+    assert(rows(crawler.linkEdges().get) == edgesAll.diff(edgesR1))
   }
 }

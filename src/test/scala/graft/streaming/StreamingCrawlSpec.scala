@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,98 +27,49 @@ class StreamingCrawlSpec extends AnyFunSuite {
     assert(out.forall(_.getLong(2) > 0))
   }
 
-  /** Both politeness implementations — the legacy flatMapGroupsWithState
-    * gate and the transformWithState successor — must satisfy the same
-    * scenarios. transformWithState requires the RocksDB state store, set
-    * only around its queries. */
-  private type Gate =
-    (org.apache.spark.sql.Dataset[FrontierEntry], Int, Long) => org.apache.spark.sql.Dataset[FrontierEntry]
-  private val impls: Seq[(String, Gate, Boolean)] = Seq(
-    ("fmgws", StreamingCrawl.politenessGate(_, _, _), false),
-    ("tws", StreamingCrawl.politenessGateTws(_, _, _), true))
-
-  private def withProvider[T](rocksdb: Boolean)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+  // Test names keep the `[fmgws]` tag: the gate runs on flatMapGroupsWithState.
+  test("politenessGate[fmgws] streaming: ≤ budget per host per trigger, priority order") {
+    val ms = MemoryStream[FrontierEntry](spark)
+    val gated = StreamingCrawl.politenessGate(ms.toDS(), 2)
+    val q = gated.writeStream
+      .format("memory").queryName("gate_out").outputMode(OutputMode.Append)
+      .start()
     try {
-      if (rocksdb) spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      f
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      // trigger 1: host a has 3 candidates — only top-2 by priority emit
+      ms.addData(
+        entry("https://a.example/1", 0.9), entry("https://a.example/2", 0.5),
+        entry("https://a.example/3", 0.7), entry("https://b.example/1", 0.1))
+      q.processAllAvailable()
+      val t1 = spark.table("gate_out").as[FrontierEntry].collect()
+      assert(t1.count(_.host == "a.example") == 2)
+      assert(t1.filter(_.host == "a.example").map(_.priority).sorted.toSeq == Seq(0.7, 0.9))
+      assert(t1.count(_.host == "b.example") == 1)
+
+      // trigger 2: fresh budget for host a
+      ms.addData(entry("https://a.example/4", 0.2), entry("https://a.example/5", 0.3))
+      q.processAllAvailable()
+      val t2 = spark.table("gate_out").as[FrontierEntry].collect()
+      assert(t2.count(_.host == "a.example") == 4)
+    } finally q.stop()
   }
 
-  for ((name, gate, rocksdb) <- impls) {
-    test(s"politenessGate[$name] streaming: ≤ budget per host per trigger, priority order") {
-      withProvider(rocksdb) {
-        val ms = MemoryStream[FrontierEntry](spark)
-        val gated = gate(ms.toDS(), 2, -1L)
-        val q = gated.writeStream
-          .format("memory").queryName(s"gate_out_$name").outputMode(OutputMode.Append)
-          .start()
-        try {
-          // trigger 1: host a has 3 candidates — only top-2 by priority emit
-          ms.addData(
-            entry("https://a.example/1", 0.9), entry("https://a.example/2", 0.5),
-            entry("https://a.example/3", 0.7), entry("https://b.example/1", 0.1))
-          q.processAllAvailable()
-          val t1 = spark.table(s"gate_out_$name").as[FrontierEntry].collect()
-          assert(t1.count(_.host == "a.example") == 2)
-          assert(t1.filter(_.host == "a.example").map(_.priority).sorted.toSeq == Seq(0.7, 0.9))
-          assert(t1.count(_.host == "b.example") == 1)
-
-          // trigger 2: fresh budget for host a
-          ms.addData(entry("https://a.example/4", 0.2), entry("https://a.example/5", 0.3))
-          q.processAllAvailable()
-          val t2 = spark.table(s"gate_out_$name").as[FrontierEntry].collect()
-          assert(t2.count(_.host == "a.example") == 4)
-        } finally q.stop()
-      }
-    }
-
-    test(s"politenessGate[$name]: maxTotalPerHost caps a host across triggers") {
-      withProvider(rocksdb) {
-        val ms = MemoryStream[FrontierEntry](spark)
-        val gated = gate(ms.toDS(), 2, 3L)
-        val q = gated.writeStream
-          .format("memory").queryName(s"gate_cap_$name").outputMode(OutputMode.Append)
-          .start()
-        try {
-          ms.addData(entry("https://c.example/1", 0.9), entry("https://c.example/2", 0.8))
-          q.processAllAvailable()
-          ms.addData(entry("https://c.example/3", 0.7), entry("https://c.example/4", 0.6))
-          q.processAllAvailable()
-          ms.addData(entry("https://c.example/5", 0.5))
-          q.processAllAvailable()
-          val out = spark.table(s"gate_cap_$name").as[FrontierEntry].collect()
-          // 2 in trigger 1, 1 in trigger 2 (ledger hits the cap), 0 in trigger 3
-          assert(out.length == 3)
-          assert(out.map(_.priority).sorted.toSeq == Seq(0.7, 0.8, 0.9))
-        } finally q.stop()
-      }
-    }
-  }
-
-  test("the two politeness implementations emit identical sets on a shared scenario") {
-    def run(gate: Gate, rocksdb: Boolean, tag: String): Set[(String, Double)] =
-      withProvider(rocksdb) {
-        val ms = MemoryStream[FrontierEntry](spark)
-        val q = gate(ms.toDS(), 3, 5L).writeStream
-          .format("memory").queryName(s"gate_par_$tag").outputMode(OutputMode.Append)
-          .start()
-        try {
-          ms.addData((1 to 7).map(i => entry(s"https://p.example/$i", i / 10.0)): _*)
-          q.processAllAvailable()
-          ms.addData((8 to 12).map(i => entry(s"https://p.example/$i", i / 100.0)): _*)
-          q.processAllAvailable()
-          spark.table(s"gate_par_$tag").as[FrontierEntry].collect()
-            .map(e => (e.url, e.priority)).toSet
-        } finally q.stop()
-      }
-    val a = run(StreamingCrawl.politenessGate(_, _, _), rocksdb = false, "a")
-    val b = run(StreamingCrawl.politenessGateTws(_, _, _), rocksdb = true, "b")
-    assert(a == b, s"implementations disagree: ${a.diff(b)} vs ${b.diff(a)}")
+  test("politenessGate[fmgws]: maxTotalPerHost caps a host across triggers") {
+    val ms = MemoryStream[FrontierEntry](spark)
+    val gated = StreamingCrawl.politenessGate(ms.toDS(), 2, 3L)
+    val q = gated.writeStream
+      .format("memory").queryName("gate_cap").outputMode(OutputMode.Append)
+      .start()
+    try {
+      ms.addData(entry("https://c.example/1", 0.9), entry("https://c.example/2", 0.8))
+      q.processAllAvailable()
+      ms.addData(entry("https://c.example/3", 0.7), entry("https://c.example/4", 0.6))
+      q.processAllAvailable()
+      ms.addData(entry("https://c.example/5", 0.5))
+      q.processAllAvailable()
+      val out = spark.table("gate_cap").as[FrontierEntry].collect()
+      // 2 in trigger 1, 1 in trigger 2 (ledger hits the cap), 0 in trigger 3
+      assert(out.length == 3)
+      assert(out.map(_.priority).sorted.toSeq == Seq(0.7, 0.8, 0.9))
+    } finally q.stop()
   }
 }
