@@ -398,7 +398,13 @@ object TextOps {
     val segArr = transform(
       sequence(lit(1L), ceil(size(t) / lit(10.0)).cast("long")),
       i => concat_ws(" ", slice(t, ((i - 1) * segLen + 1).cast("int"), lit(segLen))))
-    val segs = fanOut(documents(s, d).select(col("doc_id"), col("text")))
+    // A NULL text has no tokens and so no segments: the oracle's UNNEST
+    // drops the doc. Spark's size(NULL) is -1, whose sequence would emit
+    // segments (and take the keeper of the "" segment from a real
+    // empty-text doc).
+    val docs = documents(s, d).select(col("doc_id"), col("text"))
+      .filter(col("text").isNotNull)
+    val segs = fanOut(docs)
       .select(col("doc_id"), posexplode(segArr).as(Seq("pos0", "seg")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("seg"))
     val keepers = segs.groupBy("seg")
@@ -409,7 +415,7 @@ object TextOps {
     // and every doc has ≥ 1 segment) — counting them re-ran the whole
     // posexplode through a second agg chain for a value the row already
     // determines.
-    val ns = documents(s, d).select(col("doc_id"),
+    val ns = docs.select(col("doc_id"),
       ceil(size(tokens) / lit(10.0)).cast("long").as("n_segs"))
     val ka = keepers.groupBy("doc_id").agg(
       count(lit(1)).as("n_kept"),
@@ -456,7 +462,7 @@ object TextOps {
   private def gramsTable(s: SparkSession, d: String): DataFrame =
     SessionCache.df(s, s"jaccard_grams:$d") {
       // fanOut: parallelizes the shingle-hash build AND leaves the
-      // persisted relation with `defaultParallelism` cached partitions, so
+      // memoized relation with `defaultParallelism` partitions, so
       // every downstream join/explode over it starts wide instead of
       // inheriting the single-split scan's one partition
       fanOut(documents(s, d).select(col("doc_id"), col("text")))
@@ -679,7 +685,7 @@ object TextOps {
     // The REPORTED pair set is memoized too (sig resolved above, outside
     // this builder — the SessionCache nesting rule): dedup_minhash builds
     // it once and dedup_minhash_audit's three counting branches (reported /
-    // recalled / precise) reuse ONE persisted copy instead of re-running
+    // recalled / precise) reuse ONE materialized copy instead of re-running
     // the band self-join per branch.
     SessionCache.df(s,
       s"minhash_pairs:${p.k}:${p.bands}:${p.bucketCap}:${p.estTau}:$d") {
@@ -804,7 +810,7 @@ object TextOps {
   private def simhashTable(s: SparkSession, d: String): DataFrame =
     SessionCache.df(s, s"simhash:$d") {
       // NO fanOut here (measured): the simhash64 build is ~0.3 s of
-      // single-core work, but a 32-partition cached relation multiplies
+      // single-core work, but a 32-partition memoized relation multiplies
       // task waves in every tiny downstream stage of dedup_simhash
       // (banding, cap, self-join, top-k) for a net LOSS; the audit's n²
       // BNLJ — the one consumer that needs width — fans out its stream
@@ -814,8 +820,8 @@ object TextOps {
           graft.expr.SimHash64.simhash64(col("text")).as("simhash"))
     }
 
-  /** SimHash banded reported pairs (before presentation order/limit). */
-  /** `memo = true` persists the pair set in the SessionCache — for
+  /** SimHash banded reported pairs (before presentation order/limit).
+    * `memo = true` materializes the pair set in the SessionCache — for
     * consumers that read it more than once (the audit's counting
     * branches). The single-pass consumer (dedup_simhash) keeps
     * `memo = false`: it reads the pairs exactly once, and paying the
@@ -870,7 +876,7 @@ object TextOps {
                    p: SimHashParams = SimHashParams()): DataFrame = {
     val sh = simhashTable(s, d)
     // fanOut on the STREAM side of the all-pairs BNLJ: the n² popcount
-    // evaluation otherwise runs in as many tasks as the cached relation
+    // evaluation otherwise runs in as many tasks as the memoized relation
     // has partitions (guide §2.2)
     val truth = fanOut(sh).select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
       .crossJoin(sh.select(col("doc_id").as("id_b"), col("simhash").as("sh_b")))

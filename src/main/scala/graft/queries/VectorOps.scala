@@ -369,14 +369,14 @@ object VectorOps {
           .cast("float")).as("embedding"))
     // Memoized planted corpus (resolved before the reported builder —
     // SessionCache nesting rule): e2 feeds the hash relation AND both
-    // verify-join sides, so one persisted copy replaces ~4 evaluations of
+    // verify-join sides, so one materialized copy replaces ~4 evaluations of
     // the twin synthesis + norm.
     val e2 = SessionCache.df(s, s"embed_audit_corpus:$d") {
       graft.tables.Tables.fanOut(base.unionByName(twins))
         .withColumn("nrm", norm(col("embedding"))).filter(col("nrm") > 0)
     }
     // Memoized: the reported pair set feeds THREE counting branches
-    // (planted / band-reported / band-recalled); one persisted copy
+    // (planted / band-reported / band-recalled); one materialized copy
     // replaces three runs of the planted-corpus LSH pipeline.
     val reported = SessionCache.df(s, s"embed_audit_reported:$d") {
       embedPairsOf(e2, hashRelationOf(e2, LshParams()), 0.3)

@@ -34,7 +34,13 @@ object Tables {
     * this is a NO-OP (the guard below) — it never adds a corpus-wide
     * shuffle to a big input; for the small-file case the round-robin
     * exchange moves KBs. Parameterised by defaultParallelism, never a
-    * constant. */
+    * constant.
+    *
+    * Precondition: `df` is shuffle-free (scans, and projections, filters
+    * and unions over them, or a SessionCache memo). The split count is
+    * probed through `df.rdd`, which finalizes the child's physical plan:
+    * under AQE a child with an exchange would run that shuffle stage on
+    * the driver's call, while the query is still being built. */
   def fanOut(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= p) df else df.repartition(p)

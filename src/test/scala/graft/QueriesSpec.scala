@@ -29,6 +29,19 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("dedup_paragraph drops a NULL-text document, as the oracle's UNNEST does") {
+    val dir = java.nio.file.Files.createTempDirectory("dedup-null-text").toString
+    val words = (1 to 12).map(i => s"w$i").mkString(" ")
+    spark.createDataFrame(Seq((1L, words), (2L, null: String), (3L, "")))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val q = SparkEntry.registry.find(_.name == "dedup_paragraph").get
+    val got = q.run(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+    // the empty text is one empty token, so one (empty) segment
+    assert(got == Seq((1L, 2L, 2L, words), (3L, 1L, 1L, "")))
+  }
+
   // Collected output must not depend on the partitioning — re-run a
   // representative slice with a different shuffle-partition count.
   private val determinismSlice = Seq(
