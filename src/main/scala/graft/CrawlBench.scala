@@ -103,17 +103,12 @@ object CrawlBench {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import graft.crawl.DriverWaves.ec
-        val tx = System.nanoTime()
         val ckptF = Future(Crawler.checkpointState(out.state, Some(state)))
         // Consumed exactly once: a persist here would write ~GBs of wide
         // extracted rows into the block store per round for no reuse —
         // pure memory pressure inside the measured span.
         out.pages.agg(sum(length(col("itemText"))), sum(size(col("metrics")))).collect()
         state = Await.result(ckptF, Duration.Inf)
-        if (sys.env.get("GRAFT_CRAWL_VERBOSE").contains("1")) System.err.println(
-          f"[round] r=$r popped=${out.nPopped} " +
-            f"extract+ckpt(overlapped)=${(System.nanoTime() - tx) / 1e9}%.2fs " +
-            f"total=${(System.nanoTime() - t0) / 1e9}%.2fs")
         times += RoundTime(r, out.nPopped, (System.nanoTime() - t0) / 1e9)
 
         out.unpersistCached()

@@ -42,9 +42,6 @@ object FilterAggregators {
   def bloom_agg(expectedKeys: Long, fpp: Double)(key: Column): Column =
     udaf(new BloomShardAggregator(expectedKeys, fpp), Encoders.scalaLong).apply(key)
 
-  def cuckoo_agg(expectedKeys: Long)(key: Column): Column =
-    cuckoo_agg_buckets(GraftCuckooFilter.bucketsFor(expectedKeys))(key)
-
   def cuckoo_agg_buckets(numBuckets: Int)(key: Column): Column =
     udaf(new CuckooShardAggregator(numBuckets), Encoders.scalaLong).apply(key)
 }

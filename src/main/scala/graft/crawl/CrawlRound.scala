@@ -103,14 +103,6 @@ object CrawlRound {
     def unpersistCached(): Unit = cached.foreach(_.unpersist())
   }
 
-  private val verbose = sys.env.get("GRAFT_CRAWL_VERBOSE").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (verbose) System.err.println(f"[round] $label%-12s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
-
   /** `fetchSink`: how the fused fetch→extract→links pass MATERIALIZES.
     * None (default, the in-memory path) persists it to the block store.
     * The durable path passes the snapshot WRITE itself (commit the full
@@ -144,11 +136,9 @@ object CrawlRound {
     import scala.concurrent.duration.Duration
     import DriverWaves.ec
     val haveFailedOld = state.failedSize != 0L
-    val oldShardArraysF =
-      if (cfg.broadcastBloomProbe) Some((
-        Future(Seen.collectShardArray(state.bloomShards, cfg.nShards)),
-        if (haveFailedOld) Future(Seen.collectShardArray(state.cuckooShards, cfg.nShards))
-        else Future.successful(new Array[Array[Byte]](cfg.nShards))))
+    val bloomArrF = Future(Seen.collectShardArray(state.bloomShards, cfg.nShards))
+    val cuckooArrF =
+      if (haveFailedOld) Some(Future(Seen.collectShardArray(state.cuckooShards, cfg.nShards)))
       else None
 
     // One FUSED pass: fetch → X1/X2 extraction → link extraction, all
@@ -180,7 +170,7 @@ object CrawlRound {
         lit(round).as("fetchRound"))
     val fetched = fetchSink match {
       case None       => fetchedRaw.persist(StorageLevel.MEMORY_AND_DISK)
-      case Some(sink) => timed("commitFetch") { sink(fetchedRaw) }
+      case Some(sink) => sink(fetchedRaw)
     }
 
     // One job yields popped+fetched PER PARTITION (the lineage contract):
@@ -192,11 +182,9 @@ object CrawlRound {
     // a sink this is the action that materializes the fused pass above;
     // with one, the commit already materialized it and this job reads only
     // the status column back (a column-pruned KB-scale scan).
-    val fetchParts = timed("fetch") {
-      fetched.groupBy(spark_partition_id().as("pid"))
-        .agg(count(lit(1)).as("n"), count_if(col("status") === 200).as("ok"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    }
+    val fetchParts = fetched.groupBy(spark_partition_id().as("pid"))
+      .agg(count(lit(1)).as("n"), count_if(col("status") === 200).as("ok"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     val nPopped = fetchParts.map(_._2).sum
     val nFetched = fetchParts.map(_._3).sum
 
@@ -325,7 +313,7 @@ object CrawlRound {
     // failedSize after this round's failures (arithmetic; -1 stays unknown).
     val failedSize2 =
       if (state.failedSize >= 0) state.failedSize + nFailed else -1L
-    val rawCandidates = Frontier.expandFromLinks(fetched, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    val rawCandidates = Frontier.expandFromLinks(fetched).persist(StorageLevel.MEMORY_AND_DISK)
     val allowed = Robots.filterAllowed(rawCandidates, robots)
     // Anti vs the CHECKPOINTED input frontier, not `remaining`: frontier =
     // remaining ∪ popped and popped ⊆ seen (already excluded by filterNew),
@@ -341,19 +329,11 @@ object CrawlRound {
     // cover BOTH probe branches — a candidate the stale prefilter calls
     // "definitely new" can be a url fetched this very round.
     val exactBig = Seq(state.seenExact) ++ (if (haveFailedOld) Seq(state.failed) else Nil)
-    val deduped = oldShardArraysF match {
-      case Some((bloomF, cuckooF)) =>
-        Seen.filterNewWithArrays(allowed,
-          Await.result(bloomF, Duration.Inf),
-          if (haveFailedOld) Some(Await.result(cuckooF, Duration.Inf)) else None,
-          exactBig = exactBig,
-          exactSmall = Nil, nShards = cfg.nShards)
-      case None =>
-        Seen.filterNew(allowed, state.seenExact, state.bloomShards,
-          cfg.nShards, broadcastProbe = false,
-          failedHashes = if (haveFailedOld) Some(state.failed) else None,
-          cuckooShards = if (haveFailedOld) Some(state.cuckooShards) else None)
-    }
+    val deduped = Seen.filterNewWithArrays(allowed,
+      Await.result(bloomArrF, Duration.Inf),
+      cuckooArrF.map(Await.result(_, Duration.Inf)),
+      exactBig = exactBig,
+      exactSmall = Nil, nShards = cfg.nShards)
     // The spill table holds frontier members too (just inactive ones), so
     // candidate dedup must anti-join it as well — it is committed bucketed
     // by urlHash like the frontier, keeping the chain one-exchange. The
@@ -371,11 +351,9 @@ object CrawlRound {
     // job like the expand count.
     val enqPartsEager: Option[Seq[(Int, Long)]] =
       if (cfg.frontierCap.isEmpty) None
-      else Some(timed("dedup") {
-        newEntries.groupBy(spark_partition_id().as("pid"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      })
+      else Some(newEntries.groupBy(spark_partition_id().as("pid"))
+        .agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
 
     val frontier2 = remaining.unionByName(newEntries)
 
@@ -435,7 +413,7 @@ object CrawlRound {
     // round's persisted intermediates. Memoized by Output; consumers force
     // it concurrently with the commit wave, so it adds no serial driver
     // wave to the round.
-    val mkLineage: () => (RoundLineage, Seq[RoundLineage]) = () => timed("lineage") {
+    val mkLineage: () => (RoundLineage, Seq[RoundLineage]) = () => {
       val pid = spark_partition_id().as("pid")
       val rawAgg = rawCandidates.groupBy(pid).agg(count(lit(1)).as("n"))
         .select(lit(0).as("src"), col("pid"), col("n"))

@@ -170,50 +170,39 @@ object Frontier {
   private val HREF_PATTERN = """href="([^"]+)""""
 
   /** The raw href targets of an `html` binary column, as array<string> —
-    * the link-extraction kernel shared by [[expand]] and the crawl round's
-    * FUSED fetch pass (which computes it inline so the wide html bytes
-    * never need to be cached for a later expansion scan). */
+    * the link-extraction kernel of the crawl round's FUSED fetch pass,
+    * which computes it inline (only for status-200 rows below maxDepth) so
+    * the wide html bytes never need to be cached for a later expansion
+    * scan. */
   def extractRawLinks(html: Column): Column = {
     val htmlStr = decode(html, "UTF-8")
     regexp_extract_all(htmlStr, lit(HREF_PATTERN), lit(1))
   }
 
-  /** The shared candidate-shaping chain: (rawUrl, parentDepth) rows →
+  /** The candidate-shaping chain: (rawUrl, parentDepth) rows →
     * canonical deduped frontier entries. Children inherit priority
     * basePriority/2^depth. */
-  private def shapeCandidates(raw: DataFrame, cfg: CrawlConfig): DataFrame = {
+  private def shapeCandidates(raw: DataFrame): DataFrame = {
     val shaped = raw
       .select(canonicalize_url(col("rawUrl")).as("url"), col("parentDepth"))
       .filter(col("url").startsWith("http"))
       .withColumn("urlHash", xxhash64(col("url")))
       .withColumn("host", parse_url(col("url"), lit("HOST")))
       .withColumn("depth", col("parentDepth") + 1)
-      .withColumn("priority",
-        if (cfg.priorityHalving) basePriority(col("urlHash")) / pow(lit(2.0), col("depth"))
-        else basePriority(col("urlHash")))
+      .withColumn("priority", basePriority(col("urlHash")) / pow(lit(2.0), col("depth")))
       .withColumn("round", lit(0)) // caller stamps the real round
       .select("url", "urlHash", "host", "priority", "depth", "round")
     dedupEntries(shaped)
   }
 
-  /** E1/E2 — link extraction + candidate shaping: hrefs out of fetched
-    * html, canonicalized, hashed, deduped map-side by the partial
-    * aggregation of the groupBy (dedup-before-shuffle layer 1). */
-  def expand(fetched: DataFrame, cfg: CrawlConfig): DataFrame =
-    shapeCandidates(
-      fetched
-        .filter(col("status") === 200 && col("depth") < cfg.maxDepth)
-        .select(explode(extractRawLinks(col("html"))).as("rawUrl"),
-          col("depth").as("parentDepth")),
-      cfg)
-
-  /** [[expand]] for rows whose links are ALREADY extracted (the fused
-    * fetch pass): `processed` carries links:array<string> — null on
-    * non-200 / max-depth rows, which explode() drops, so the output is
-    * row-for-row identical to expand() over the same fetched rows. */
-  def expandFromLinks(processed: DataFrame, cfg: CrawlConfig): DataFrame =
+  /** E1/E2 — candidate shaping for rows whose links are ALREADY extracted
+    * (the fused fetch pass, see [[extractRawLinks]]): `processed` carries
+    * links:array<string> — null on non-200 / max-depth rows, which
+    * explode() drops. Hrefs are canonicalized, hashed and deduped map-side
+    * by the partial aggregation of the groupBy (dedup-before-shuffle
+    * layer 1). */
+  def expandFromLinks(processed: DataFrame): DataFrame =
     shapeCandidates(
       processed.select(explode(col("links")).as("rawUrl"),
-        col("depth").as("parentDepth")),
-      cfg)
+        col("depth").as("parentDepth")))
 }

@@ -49,32 +49,16 @@ case class RoundLineage(
     evicted: Long = 0L,
     readmitted: Long = 0L)
 
-/** Knobs, sized for the sandbox by default; the 10^10-scale values are a
-  * config change, not a code change (SURVEY.md §7 hard part 4). */
+/** The crawl knobs a caller sets, sized for the sandbox by default. The
+  * per-round host budget default is a `CrawlRound.run` argument, and the
+  * durable state tables keep SnapshotTable's bucket count. */
 case class CrawlConfig(
     nShards: Int = 16,
     expectedKeysPerShard: Long = 1L << 16,
     bloomFpp: Double = 0.01,
-    defaultBudget: Int = 5,
     /** Salt buckets for the two-phase skew-safe frontier pop (§4.4). */
     saltBuckets: Int = 16,
-    /** Children enter the frontier at basePriority / 2^depth. */
-    priorityHalving: Boolean = true,
     maxDepth: Int = 100,
-    /** true: broadcast all bloom shards (small-shard scale). false: the
-      * 10^10 path — shuffle-hash-join the shard table on shardId so each
-      * shard's bits travel once to its reducer (Seen.filterNew §4.10). */
-    broadcastBloomProbe: Boolean = true,
-    /** Parquet codec for the pages table (the store's bulk bytes — state
-      * tables are narrow). None = session default (snappy): fastest wall
-      * on a single box. "zstd" writes ~1.9× fewer bytes at 2–3× encoder
-      * CPU (round-5 codec A/B, BENCH/BASELINE.md) — the right
-      * default on a cluster where page bytes hit real storage. */
-    pagesCodec: Option[String] = None,
-    /** Hash-bucket count for the durable frontier/seen/failed tables
-      * (storage-partitioned anti-joins — SnapshotTable bucketKey). At
-      * cluster scale set ≈ total executor cores. */
-    stateBuckets: Int = 32,
     /** Active-frontier size cap. When the frontier outgrows it, the
       * lowest-priority entries are EVICTED to a spill table (priority-floor
       * compaction — Frontier.splitTopByPriority) and re-admitted,

@@ -107,10 +107,9 @@ object Seen {
   /** Collect a (shardId, bits, …) shard table into a dense array indexed
     * by shardId (missing shards stay null = empty), ready to broadcast for
     * the zero-copy probe expressions. Driver-side size = the full shard
-    * table — only for the broadcast-probe regime. Callers on a hot path
-    * can run this inside a Future CONCURRENTLY with other driver actions
-    * (it is an independent Spark job) and hand the array to
-    * [[probeWithArrays]]. */
+    * table. Callers on a hot path can run this inside a Future
+    * CONCURRENTLY with other driver actions (it is an independent Spark
+    * job) and hand the array to [[probeWithArrays]]. */
   def collectShardArray(shards: DataFrame, nShards: Int): Array[Array[Byte]] = {
     val arr = new Array[Array[Byte]](nShards)
     shards.select("shardId", "bits").collect()
@@ -173,119 +172,23 @@ object Seen {
     definitelyNew.unionByName(confirmedNew)
   }
 
-  /** The 10^10 probe regime: shard bytes travel and materialize ONCE per
-    * reducer, never per candidate row.
-    *
-    * Why not a shuffle-hash JOIN on shardId (the round-2 shape): the
-    * joined `bits` column is a per-row BINARY reference, and join/filter
-    * codegen materializes every referenced column per output row —
-    * `UnsafeRow.getBinary` COPIES the whole shard, so every candidate pays
-    * a shard-sized memcpy. Measured: an expression-level per-task cache
-    * CANNOT fix this — for outer joins the generated code getBinary's the
-    * build-side value eagerly before any downstream expression runs (and
-    * FilterExec likewise pre-evaluates condition-referenced columns), so
-    * the cache only memoizes an already-copied value. The copy has to be
-    * designed out of the PLAN, not the expression.
-    *
-    * Shape: shard rows and candidate rows UNION into one relation tagged
-    * (shardId, tag) with tag 0 = shard / 1 = candidate, repartition by
-    * shardId (ONE narrow shuffle; each shard's bytes cross it once), sort
-    * within partitions by (shardId, tag) so a shard's bytes immediately
-    * precede its candidates, then a single streaming pass stashes the
-    * current shard's bytes and probes candidates against it — O(1) filter
-    * state per task regardless of shards-per-task, one materialization per
-    * (task, shard). Candidates whose shard has no row probe false (an
-    * absent shard holds no keys). */
-  def probePartitioned(candidates: DataFrame, bloomShards: DataFrame,
-                       cuckooShards: Option[DataFrame], nShards: Int): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
-    val nullBin = lit(null).cast("binary")
-    val candSchema = candidates.schema
-    val candT = candidates.select(
-      shardFor(col("urlHash"), nShards).as("shardId"), lit(1).as("tag"),
-      nullBin.as("bloomBits"), nullBin.as("cuckooBits"),
-      struct(candidates.columns.map(col).toSeq: _*).as("cand"))
-    val nullCand = lit(null).cast(candSchema.catalogString)
-    val bloomT = bloomShards.select(col("shardId"), lit(0).as("tag"),
-      col("bits").as("bloomBits"), nullBin.as("cuckooBits"), nullCand.as("cand"))
-    val shardT = cuckooShards match {
-      case Some(ck) => bloomT.unionByName(ck.select(col("shardId"), lit(0).as("tag"),
-        nullBin.as("bloomBits"), col("bits").as("cuckooBits"), nullCand.as("cand")))
-      case None => bloomT
-    }
-    val parted = shardT.unionByName(candT)
-      .repartition(col("shardId"))
-      .sortWithinPartitions(col("shardId"), col("tag"))
-    val outSchema = StructType(candSchema.fields :+ StructField("maybe_seen", BooleanType, nullable = false))
-    val nCandCols = candSchema.length
-    val urlHashIdx = candSchema.fieldIndex("urlHash") // hoisted: per-row name lookup is a hot-path map probe
-    parted.mapPartitions { it =>
-      var curSid = Int.MinValue
-      var bloomBytes: Array[Byte] = null
-      var cuckooBytes: Array[Byte] = null
-      it.flatMap { r =>
-        val sid = r.getInt(0)
-        if (sid != curSid) { curSid = sid; bloomBytes = null; cuckooBytes = null }
-        if (r.getInt(1) == 0) { // shard row: stash, emit nothing
-          val b = r.getAs[Array[Byte]](2); if (b != null) bloomBytes = b
-          val c = r.getAs[Array[Byte]](3); if (c != null) cuckooBytes = c
-          Iterator.empty
-        } else {
-          val cand = r.getStruct(4)
-          val key = cand.getLong(urlHashIdx)
-          val hit =
-            (bloomBytes != null &&
-              graft.filters.GraftBloomFilter.mightContainSerialized(bloomBytes, key)) ||
-            (cuckooBytes != null &&
-              graft.filters.GraftCuckooFilter.containsSerialized(cuckooBytes, key))
-          val out = new Array[Any](nCandCols + 1)
-          var i = 0
-          while (i < nCandCols) { out(i) = cand.get(i); i += 1 }
-          out(nCandCols) = hit
-          Iterator.single(Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out)))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
   /** Candidates → the definitely-new subset, using bloom-then-exact.
     * `candidates` must carry `urlHash`; all its columns survive.
     *
-    * Probe-side strategy (`broadcastProbe`):
-    *  - `true` (default, sandbox/small-shard scale): the shard table is
-    *    collected and broadcast as a plain array, and the probe is a
-    *    custom expression that reads the shared bytes ZERO-COPY inside
-    *    codegen (see graft.expr.ShardedProbe). A broadcast JOIN would be
-    *    map-side too, but its per-row `bits` column read copies the whole
-    *    shard per candidate row (~40 GB/round of memcpy at bench scale) —
-    *    pure memory bandwidth, the one resource a single box cannot scale.
-    *  - `false` (the 10^10 path, §4.10): at full scale the shard table is
-    *    ~12 GB of bits — collecting/broadcasting it is the OOM. The probe
-    *    is [[probePartitioned]]: shards and candidates co-shuffle on
-    *    shardId and a single sorted streaming pass probes each candidate
-    *    against its shard's bytes, which materialize once per (task,
-    *    shard) — never per row (see probePartitioned's scaladoc for why a
-    *    probe JOIN cannot achieve this). */
+    * Probe side: the shard tables are collected and broadcast as plain
+    * arrays, and the probe is a custom expression that reads the shared
+    * bytes ZERO-COPY inside codegen (see graft.expr.ShardedProbe). A
+    * broadcast JOIN would be map-side too, but its per-row `bits` column
+    * read copies the whole shard per candidate row (~40 GB/round of memcpy
+    * at bench scale) — pure memory bandwidth, the one resource a single box
+    * cannot scale. The exact layer anti-joins the maybe-seen remainder
+    * against BOTH ground-truth tables (permanent seen + deletable failed),
+    * so filter false positives never drop a genuinely new url. */
   def filterNew(candidates: DataFrame, seenExact: DataFrame,
                 bloomShards: DataFrame, nShards: Int,
-                broadcastProbe: Boolean = true,
                 failedHashes: Option[DataFrame] = None,
-                cuckooShards: Option[DataFrame] = None): DataFrame = {
-    val probed =
-      if (broadcastProbe)
-        probeWithArrays(candidates, collectShardArray(bloomShards, nShards),
-          cuckooShards.map(collectShardArray(_, nShards)), nShards)
-      else probePartitioned(candidates, bloomShards, cuckooShards, nShards)
-
-    val definitelyNew = probed.filter(!col("maybe_seen")).drop("maybe_seen")
-    // Only the maybe-seen remainder pays the shuffle of the exact anti join
-    // — against BOTH ground-truth tables (permanent seen + deletable
-    // failed), chained so bucketed scans keep their storage partitioning,
-    // and filter false positives never drop a genuinely new url.
-    val confirmedNew = antiChain(probed.filter(col("maybe_seen")).drop("maybe_seen"),
-      Seq(seenExact) ++ failedHashes.toSeq, Nil)
-
-    definitelyNew.unionByName(confirmedNew)
-  }
+                cuckooShards: Option[DataFrame] = None): DataFrame =
+    filterNewWithArrays(candidates, collectShardArray(bloomShards, nShards),
+      cuckooShards.map(collectShardArray(_, nShards)),
+      exactBig = Seq(seenExact) ++ failedHashes.toSeq, exactSmall = Nil, nShards = nShards)
 }

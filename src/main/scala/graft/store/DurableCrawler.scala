@@ -169,19 +169,19 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
   // urlHash: their committed scans arrive pre-partitioned, so the per-round
   // dedup joins exchange ONLY the small candidate side (see CrawlRound).
   val frontier = new SnapshotTable(spark, root, "frontier",
-    bucketKey = Some("urlHash"), nBuckets = cfg.stateBuckets)
+    bucketKey = Some("urlHash"))
   val seen = new SnapshotTable(spark, root, "seen",
-    bucketKey = Some("urlHash"), nBuckets = cfg.stateBuckets)
+    bucketKey = Some("urlHash"))
   val shards = new SnapshotTable(spark, root, "shards")
   val failed = new SnapshotTable(spark, root, "failed",
-    bucketKey = Some("urlHash"), nBuckets = cfg.stateBuckets)
+    bucketKey = Some("urlHash"))
   val cuckoo = new SnapshotTable(spark, root, "cuckoo")
   /** Frontier overflow under cfg.frontierCap — bucketed like the frontier
     * (the candidate dedup anti-chain joins it too). Only written when a
     * cap is configured and spill exists. */
   val spilled = new SnapshotTable(spark, root, "spilled",
-    bucketKey = Some("urlHash"), nBuckets = cfg.stateBuckets)
-  val pages = new SnapshotTable(spark, root, "pages", codec = cfg.pagesCodec)
+    bucketKey = Some("urlHash"))
+  val pages = new SnapshotTable(spark, root, "pages")
   val lineage = new SnapshotTable(spark, root, "lineage")
 
   private val logDir = Paths.get(root, "roundlog")
@@ -523,8 +523,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
                   else df.withColumn("fetchRound", lit(r))
     stamped.filter(col("status") === 200).select(PAGE_COLS.map(col): _*)
   }
-  private def pagesOfRound(r: Int): DataFrame =
-    pageView(pages.read(entry(r).pagesV), r)
 
   /** The retained window's (pagesV → rounds pointing at it) map. Before
     * `compactPages` every version is pointed at by exactly one round;

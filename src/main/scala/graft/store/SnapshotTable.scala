@@ -28,18 +28,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   * move leaves the table at vN-1 with only unreferenced orphan files — a
   * re-run overwrites them; readers never see a torn state.
   */
-/** `codec`: parquet compression for this table's data files (None =
-  * session default, snappy). Measured tradeoff on the crawl-round page
-  * volume (WriteBench, BENCH/BASELINE.md round 5): zstd writes 1.9×
-  * fewer bytes at 2–3× encoder CPU — on a single box whose writes land
-  * in page cache, snappy's wall time wins; on a cluster writing to real
-  * storage where bytes ARE the cost, set zstd. Read side is
-  * self-describing (parquet footer), so the codec can change between
-  * versions of one table freely. */
 class SnapshotTable(spark: SparkSession, root: String, val name: String,
                     val bucketKey: Option[String] = None,
-                    val nBuckets: Int = 32,
-                    val codec: Option[String] = None) {
+                    val nBuckets: Int = 32) {
   private val mapper = new ObjectMapper()
   private val tableDir = Paths.get(root, name)
   private val metaDir = tableDir.resolve("metadata")
@@ -83,14 +74,13 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
         // shuffles, to the bucket count. repartition aligns write tasks
         // with buckets (same murmur3 hash) → one file per bucket, and
         // sortBy lets SMJ skip the big-side sort too.
-        val w = df.repartition(nBuckets, df.col(k))
+        df.repartition(nBuckets, df.col(k))
           .write.mode("overwrite")
           .bucketBy(nBuckets, k).sortBy(k)
           .option("path", dataDir.toString)
-        codec.fold(w)(c => w.option("compression", c)).saveAsTable(tableIdent(v))
+          .saveAsTable(tableIdent(v))
       case None =>
-        val w = df.write.mode("overwrite")
-        codec.fold(w)(c => w.option("compression", c)).parquet(dataDir.toString)
+        df.write.mode("overwrite").parquet(dataDir.toString)
     }
 
     val files = Files.list(dataDir).iterator().asScala
@@ -175,8 +165,8 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
     * The bucket layout comes from the MANIFEST of the version being read,
     * never from this handle's configuration: a version written before
     * bucketing existed (plain parquet, no bucket suffix in the file names)
-    * must read as plain parquet, and a version written under a different
-    * `stateBuckets` config must register with ITS bucket count — a wrong
+    * must read as plain parquet, and a version written with a different
+    * `nBuckets` must register with ITS bucket count — a wrong
     * CLUSTERED BY registration would report false HashPartitioning to the
     * planner and silently break the storage-partitioned anti-joins
     * (already-seen urls slipping through dedup, with no error anywhere). */

@@ -114,32 +114,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("LeftAnti"), p.take(2000))
   }
 
-  test("seen filter: the 10^10 shard-probe path shuffles, matches broadcast results") {
+  test("seen filter probes 64 bloom+cuckoo shards exactly") {
     import spark.implicits._
-    val candidates = spark.range(200)
-      .select(col("id").as("urlHash"), concat(lit("u"), col("id")).as("url"))
-    val seen = spark.range(0, 120).select(col("id").as("urlHash"))
-    val shards = graft.crawl.Seen.buildBloomShards(seen, 4, 1024)
-    val a = graft.crawl.Seen.filterNew(candidates, seen, shards, 4, broadcastProbe = true)
-      .collect().map(_.toString).sorted.toSeq
-    val big = graft.crawl.Seen.filterNew(candidates, seen, shards, 4, broadcastProbe = false)
-    val b = big.collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.size == 80)
-    val p = big.queryExecution.executedPlan.toString
-    // The probe is the co-partitioned streaming pass, NOT a join carrying
-    // shard bytes per row: no join node touches `bits`; the probe leg is
-    // union → one shardId exchange → per-partition sort → MapPartitions.
-    assert(!p.contains("ShuffledHashJoin"), p.take(2000))
-    assert(p.contains("MapPartitions"), p.take(2000))
-    assert(p.contains("Union"), p.take(2000))
-  }
-
-  test("partitioned-stream probe stays correct when one task sees MANY shards") {
-    import spark.implicits._
-    // 64 shards into 4 shuffle partitions → every reducer streams ~16
-    // shardId groups, exercising the sorted stash hand-over (bloom AND
-    // cuckoo rows per group). Both probe regimes and the exact layer must
-    // agree.
+    // 64 shards: the broadcast shard arrays are indexed far past shard 7,
+    // with bloom AND cuckoo bytes present, across 4 candidate partitions.
+    // The result must be exactly the candidates in neither seen nor failed.
     val candidates = spark.range(5000)
       .select(col("id").as("urlHash"), concat(lit("u"), col("id")).as("url"))
       .repartition(4)
@@ -148,7 +127,6 @@ class PlanShapeSpec extends AnyFunSuite {
     val bloom = graft.crawl.Seen.buildBloomShards(seen, 64, 256)
     val cuckoo = graft.crawl.Seen.buildCuckooShards(failedHashes, 64, 256)
     val out = graft.crawl.Seen.filterNew(candidates, seen, bloom, 64,
-      broadcastProbe = false,
       failedHashes = Some(failedHashes), cuckooShards = Some(cuckoo))
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(out == (3500L until 5000L).toSeq)

@@ -23,25 +23,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.read(v0).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
-  test("codec option controls data-file compression; reads are codec-agnostic") {
-    val root = tmpRoot()
-    val t = new SnapshotTable(spark, root, "t", codec = Some("zstd"))
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
-    val files = Files.list(java.nio.file.Paths.get(root, "t/data/v0"))
-      .iterator()
-    val names = scala.jdk.CollectionConverters.IteratorHasAsScala(files)
-      .asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
-    assert(names.nonEmpty && names.forall(_.contains(".zstd.")),
-      s"expected zstd data files, got $names")
-    // a handle WITHOUT the codec (e.g. a resumed process with default
-    // config) still reads the zstd version — parquet is self-describing
-    val plain = new SnapshotTable(spark, root, "t")
-    assert(plain.read(0).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    // and subsequent commits may change codec per version freely
-    plain.commit(Seq((3L, "c")).toDF("k", "s"))
-    assert(plain.read().collect().map(_.getLong(0)).toSeq == Seq(3L))
-  }
-
   test("empty DataFrame commits and reads back with schema") {
     val t = new SnapshotTable(spark, tmpRoot(), "t")
     t.commit(Seq.empty[(Long, String)].toDF("k", "s"))
