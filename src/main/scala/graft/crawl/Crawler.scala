@@ -126,66 +126,6 @@ object Crawler {
     } finally toRetry.unpersist()
   }
 
-  /** Frontier entries for a RECRAWL (freshness refresh) of stale pages —
-    * the shared kernel behind `Crawler.refresh` and
-    * `DurableCrawler.refresh`. A page is stale when its LATEST fetch
-    * (`max(fetchRound)` per url — a url appears once per fetch after
-    * refreshes, so the latest row is what ages) is ≤ `maxFetchRound`.
-    * Stale urls not already waiting in a frontier member re-enqueue at
-    * `priority` for `nextRound`. This is the feed for the as-of/latest
-    * join (J6, "re-scrape picks latest filing"): downstream consumers
-    * read the newest page per url, older fetches remain in the page log
-    * as history.
-    *
-    * Scale shape: one hash agg on urlHash (max_by keeps the latest row's
-    * fields — no window sort), anti-joins against the frontier members
-    * (bucket-partitioned in the durable store). The refreshed urls are
-    * ALREADY in the seen set and stay there — re-enqueued entries pop
-    * fine (the seen filter applies to LINK candidates, never to frontier
-    * rows), and their re-fetch unions their hash into seenExact again:
-    * seen is consumed exclusively under SET semantics (anti joins /
-    * might-contain probes), so the duplicate row is semantically inert. */
-  def refreshEntries(pages: DataFrame, frontierMembers: Seq[DataFrame],
-                     maxFetchRound: Int, nextRound: Int,
-                     priority: Double): DataFrame = {
-    val latest = pages
-      .groupBy("urlHash")
-      .agg(
-        max("fetchRound").as("lastFetch"),
-        max_by(struct(col("url"), col("host"), col("depth")), col("fetchRound")).as("k"))
-      .filter(col("lastFetch") <= maxFetchRound)
-      .select(col("k.url").as("url"), col("urlHash"),
-        col("k.host").as("host"), col("k.depth").as("depth"))
-    shapeReenqueue(latest, frontierMembers, nextRound, priority)
-  }
-
-  /** Shared re-enqueue shaping: `due` rows (url, urlHash, host, depth)
-    * not already waiting in a frontier member become frontier entries at
-    * `priority` for `nextRound` — the tail of both refresh policies
-    * (staleness-cutoff `refreshEntries` and the change-rate policy in
-    * `DurableCrawler.refreshAdaptive`). */
-  def shapeReenqueue(due: DataFrame, frontierMembers: Seq[DataFrame],
-                     nextRound: Int, priority: Double): DataFrame =
-    frontierMembers.foldLeft(due) { (df, m) =>
-        df.join(m.select("urlHash"), Seq("urlHash"), "left_anti")
-      }
-      .select(col("url"), col("urlHash"), col("host"),
-        lit(priority).as("priority"), col("depth"),
-        lit(nextRound).as("round"))
-
-  /** In-memory recrawl: re-enqueue pages whose latest fetch is ≤
-    * `maxFetchRound` (see `refreshEntries`). Returns the state with the
-    * augmented frontier checkpointed; drive further rounds with
-    * `CrawlRound.run(…, round = nextRound, …)`. */
-  def refresh(state: CrawlRound.State, pages: DataFrame, maxFetchRound: Int,
-              nextRound: Int, priority: Double): CrawlRound.State = {
-    val entries = refreshEntries(pages,
-      Seq(state.frontier) ++ state.spilled.toSeq, maxFetchRound, nextRound, priority)
-    state.copy(
-      frontier = state.frontier.unionByName(entries).localCheckpoint(true),
-      frontierSize = -1L) // data-dependent growth → recount if a cap applies
-  }
-
   def run(spark: SparkSession, seeds: Seq[String], fetcher: Fetcher,
           robots: DataFrame, budgets: DataFrame, defaultBudget: Int,
           nRounds: Int, cfg: CrawlConfig = CrawlConfig()): Result = {

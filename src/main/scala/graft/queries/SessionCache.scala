@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * A memo is DATA, not a plan: `df` stores the build eagerly
   * localCheckpoint-ed (lineage truncated to a `LogicalRDD`), as
-  * `Crawler.checkpointState` and `LinkGraph.pageRank` store their results.
+  * `Crawler.checkpointState` stores the crawl state.
   * A `persist()`-ed memo would keep its executed physical plan in the
   * CacheManager for recomputation, and with it every broadcast exchange
   * the plan ran and that exchange's driver-side hash relation: a

@@ -96,9 +96,8 @@ object Warc {
         nextRec = null
         // EOF is a CLEAN end only here, before the first header line of a
         // record. Swallowing EOF around the whole parse silently dropped a
-        // truncated final record (e.g. a .warc.gz picked up by readStream
-        // mid-copy — the file source then marks the file done and
-        // exactly-once means no retry): silent data loss in the ingest
+        // truncated final record (e.g. a .warc.gz read while still being
+        // copied into the input directory): silent data loss in the ingest
         // path. EOF after 'WARC/' or inside readFully now throws, letting
         // the caller quarantine/retry the file.
         var l: String = null
@@ -154,28 +153,6 @@ object Warc {
       .mapPartitions(_.flatMap(parseWarcGz).map { case (url, ts, html, lang) =>
         // text derives inside the SAME typed pass with the fetch path's own
         // single-pass strip kernel — no UDF, no second scan of the payload
-        (url, ts, html, SyntheticCorpus.stripHtml(new String(html, UTF_8)), lang)
-      })
-      .toDF("url", "warc_ts", "html", "text", "lang")
-  }
-
-  /** STREAMING ingest of the same directory — new `.warc.gz` files are
-    * picked up incrementally by the file source (exactly-once per file
-    * via the source's own log), parsed with the identical per-member
-    * record reader, and emitted in the canonical input shape. This is
-    * the continuous-crawl feed: an archive drop-box becomes a live
-    * corpus stream for the politeness-gated processing tier. */
-  def readStream(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val binarySchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
-    spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", "*.warc.gz")
-      .schema(binarySchema)
-      .load(dir)
-      .select(col("content"))
-      .as[Array[Byte]]
-      .mapPartitions(_.flatMap(parseWarcGz).map { case (url, ts, html, lang) =>
         (url, ts, html, SyntheticCorpus.stripHtml(new String(html, UTF_8)), lang)
       })
       .toDF("url", "warc_ts", "html", "text", "lang")

@@ -22,6 +22,10 @@ import graft.fetch.Fetcher
   * priorities, no wall clock in the data path) — reproduces byte-identical
   * outputs. Orphaned table versions from a killed round are unreferenced
   * and harmless.
+  *
+  * The round log only grows: `init` and `runRounds` each write a NEW
+  * entry, and no path rewrites a committed one, so every round owns the
+  * pages version it committed.
   */
 class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = CrawlConfig())
     extends AutoCloseable {
@@ -53,7 +57,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     n.put("pid", ProcessHandle.current().pid())
     n.put("token", lockToken)
     n.put("heartbeatMs", System.currentTimeMillis())
-    // Tempfile + ATOMIC_MOVE (the writeEntryFile pattern): an in-place
+    // Tempfile + ATOMIC_MOVE (the writeEntry pattern): an in-place
     // truncate+write torn by a kill mid-heartbeat left an empty lock file
     // that every future writer parsed as pid=-1 = live holder, permanently
     // degrading kill-recovery to manual lock removal.
@@ -201,12 +205,12 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
   /** Round-log format version. v1 had no failedV/cuckooV (the deletable
     * seen-subset landed later); missing fields read as NO_TABLE so a store
     * written by the old format resumes with empty failed/cuckoo state
-    * instead of NPE-ing. v3 declares that entries may SHARE a pagesV
-    * (pages compaction) and readers must iterate distinct versions with a
-    * per-round row filter — a v2 reader iterating per-round would silently
-    * DOUBLE-READ a compacted store, so v3 makes it fail fast instead.
-    * Unknown FUTURE versions fail fast with a clear message rather than
-    * misreading fields. */
+    * instead of NPE-ing. v3 marked stores whose entries could SHARE a
+    * pagesV (the pages compaction earlier builds ran), so that a v2 reader
+    * fails fast instead of double-reading them. This build writes one
+    * pages version per round and rejects shared versions
+    * (`roundVersions`). Unknown FUTURE versions fail fast with a clear
+    * message rather than misreading fields. */
   private val FORMAT_VERSION = 3
   private val NO_TABLE = Long.MinValue
 
@@ -234,12 +238,12 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
         if (n.has("bloomKeysPerShard")) n.get("bloomKeysPerShard").asLong() else -1L)
   }
 
-  /** Atomic entry-file write WITHOUT the pointer swap — `compactPages`
-    * rewrites HISTORICAL entries, which must never move `current`
-    * backwards. Entry writes are ATOMIC (temp + rename): refresh /
-    * compaction REWRITE entries the pointer (transitively) references, so
-    * a torn write would corrupt the visible state. */
-  private def writeEntryFile(e: RoundEntry): Unit = {
+  /** Commit a round: write its entry file, then swap `current` to it. Both
+    * writes are atomic (temp + rename). The entry file of a round that
+    * `current` does not yet reference may be replaced — a run killed
+    * between the two writes re-runs that round — but a committed entry is
+    * never written again. */
+  private def writeEntry(e: RoundEntry): Unit = {
     Files.createDirectories(logDir)
     val node = mapper.createObjectNode()
     node.put("format", FORMAT_VERSION)
@@ -258,10 +262,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     Files.writeString(etmp, node.toString)
     Files.move(etmp, logDir.resolve(s"round-${e.round}.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def writeEntry(e: RoundEntry): Unit = {
-    writeEntryFile(e)
     val tmp = logDir.resolve(s".current.tmp.${e.round}")
     Files.writeString(tmp, e.round.toString)
     Files.move(tmp, logPointer, StandardCopyOption.ATOMIC_MOVE,
@@ -312,8 +312,9 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
   /** The committed lineage table of a completed round. */
   def lineageAt(round: Int): DataFrame = lineage.read(entry(round).lineageV)
 
-  /** Committed pages-table version of a round (time-travel handle; the
-    * round-sliced read and its plan tests address versions through it). */
+  /** The pages-table version round `round` committed (time-travel handle;
+    * the round-sliced read and its plan tests address versions through
+    * it). */
   def pagesVersionAt(round: Int): Long = entry(round).pagesV
 
   /** Run rounds (lastComplete+1 .. untilRound]. `failBeforeLogAt` injects a
@@ -406,91 +407,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     out.result()
   }
 
-  /** RECRAWL (freshness refresh): re-enqueue every RETAINED page whose
-    * latest fetch is ≤ `maxFetchRound` at `priority` (semantics + scale
-    * shape in `Crawler.refreshEntries`), committing the augmented
-    * frontier and atomically REWRITING the current round's log entry to
-    * reference it — the next `runRounds` call pops the refreshed urls in
-    * the normal deterministic order. Crash-safe: the frontier version
-    * commits first; a kill before the entry rewrite leaves the store
-    * exactly as before (orphan version, unreferenced). Pages older than
-    * the gc retention are not visible to refresh — by design, a freshness
-    * policy reads the live corpus. Returns the number of urls
-    * re-enqueued. */
-  def refresh(maxFetchRound: Int, priority: Double): Long = {
-    ensureWriterLock()
-    val last = lastCompleteRound.getOrElse(
-      throw new IllegalStateException("call init() first"))
-    require(last >= 0, "refresh needs at least one crawled round")
-    val st = stateAt(last)
-    val pagesAll = allPages().getOrElse(return 0L)
-    enqueueEntries(last, st, Crawler.refreshEntries(pagesAll,
-      Seq(st.frontier) ++ st.spilled.toSeq, maxFetchRound, last + 1, priority))
-  }
-
-  /** ADAPTIVE recrawl — the change-rate freshness policy (Cho &
-    * Garcia-Molina, TODS 2003: refresh proportionally to each page's
-    * observed change rate, not on a fixed clock). From the retained fetch
-    * history, per url: firstFetch, lastFetch, and nContent = distinct
-    * itemText hashes across its fetches. A url with nContent > 1 changed
-    * at least nContent − 1 times over (lastFetch − firstFetch) rounds, so
-    * its estimated change interval is (lastFetch − firstFetch) /
-    * (nContent − 1); it is DUE when the rounds since its last fetch reach
-    * that interval — evaluated by exact cross-multiplication, no float:
-    *
-    *   (now − lastFetch) · (nContent − 1) ≥ lastFetch − firstFetch
-    *
-    * Never-observed-to-change urls (nContent = 1, including every
-    * single-fetch url) are never due here — they refresh via the plain
-    * staleness cutoff `refresh`. Same commit/rewrite machinery, same
-    * scale shape (ONE hash agg over the page log — the content hash rides
-    * the same aggregation; anti-joins against the bucketed frontier).
-    * Returns the number of urls re-enqueued at `priority`. */
-  def refreshAdaptive(priority: Double): Long = {
-    ensureWriterLock()
-    val last = lastCompleteRound.getOrElse(
-      throw new IllegalStateException("call init() first"))
-    require(last >= 0, "refreshAdaptive needs at least one crawled round")
-    val st = stateAt(last)
-    val pagesAll = allPages().getOrElse(return 0L)
-    val now = last + 1
-    val due = pagesAll
-      .groupBy("urlHash")
-      .agg(
-        max("fetchRound").as("lastFetch"),
-        min("fetchRound").as("firstFetch"),
-        countDistinct(xxhash64(col("itemText"))).as("nContent"),
-        max_by(struct(col("url"), col("host"), col("depth")), col("fetchRound")).as("k"))
-      .filter(col("nContent") > 1 &&
-        (lit(now) - col("lastFetch")) * (col("nContent") - 1)
-          >= col("lastFetch") - col("firstFetch"))
-      .select(col("k.url").as("url"), col("urlHash"),
-        col("k.host").as("host"), col("k.depth").as("depth"))
-    enqueueEntries(last, st, Crawler.shapeReenqueue(due,
-      Seq(st.frontier) ++ st.spilled.toSeq, now, priority))
-  }
-
-  /** Commit-and-rewrite tail shared by the refresh policies: union the
-    * entries into the current frontier, commit the version, atomically
-    * rewrite the current round's entry. A kill before the rewrite leaves
-    * the store untouched (orphan version). */
-  private def enqueueEntries(last: Int, st: CrawlRound.State,
-                             entriesRaw: DataFrame): Long = {
-    val e = entry(last)
-    val entries = entriesRaw.persist()
-    try {
-      val n = entries.count() // refresh is a rare op; one small job keeps
-                              // frontierSize exact through the rewrite
-      if (n > 0) {
-        val fv = frontier.commit(st.frontier.unionByName(entries))
-        writeEntry(e.copy(frontierV = fv,
-          frontierSize = if (e.frontierSize >= 0) e.frontierSize + n else -1L))
-        heartbeat()
-      }
-      n
-    } finally entries.unpersist()
-  }
-
   /** Oldest round whose log entry is still on disk — gc() trims older
     * entries, so corpus reads start here instead of round 0. */
   def oldestRetainedRound: Option[Int] = lastCompleteRound.map { last =>
@@ -524,29 +440,28 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     stamped.filter(col("status") === 200).select(PAGE_COLS.map(col): _*)
   }
 
-  /** The retained window's (pagesV → rounds pointing at it) map. Before
-    * `compactPages` every version is pointed at by exactly one round;
-    * after, a compacted version is shared by its window. Reads iterate
-    * DISTINCT versions and row-filter to the rounds that point at each —
-    * which also keeps every crash-prefix of a compaction's entry rewrites
-    * exact (a half-repointed window reads the repointed rounds from the
-    * merged version and the rest from their old per-round versions,
-    * never both). */
-  private def versionRounds(lo: Int, hi: Int): Seq[(Long, Seq[Int])] =
-    (lo to hi).map(r => (entry(r).pagesV, r)).groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (v, rs) => (v, rs.map(_._2)) }
+  /** (round, pagesV) for rounds [lo, hi]. Every round owns the version it
+    * committed, so a read takes each one whole. Entries that SHARE a
+    * version come from the pages compaction earlier builds ran: read per
+    * round, the shared rows would come back once per round that points at
+    * them, so such a store fails fast here instead. */
+  private def roundVersions(lo: Int, hi: Int): Seq[(Int, Long)] = {
+    val rv = (lo to hi).map(r => (r, entry(r).pagesV))
+    val shared = rv.groupBy(_._2).collect { case (v, rs) if rs.size > 1 =>
+      s"v$v <- rounds ${rs.map(_._1).mkString(",")}" }
+    require(shared.isEmpty,
+      s"round-log entries share a pages version (${shared.mkString("; ")}): " +
+        "written by the pages compaction of an earlier build, which this build " +
+        "no longer reads — it expects one pages version per round")
+    rv
+  }
 
-  private def roundFiltered(df: DataFrame, rs: Seq[Int]): DataFrame =
-    if (df.columns.contains("fetchRound"))
-      df.filter(col("fetchRound").isin(rs.map(Int.box): _*))
-    else df // pre-fetchRound versions are never shared (only compaction shares)
-
-  /** All RETAINED pages up to the last complete round (the union over the
-    * retention window's distinct page versions — the full corpus when
+  /** All RETAINED pages up to the last complete round (the union of the
+    * retention window's per-round page versions — the full corpus when
     * gc() has never run). */
   def allPages(): Option[DataFrame] = lastCompleteRound.filter(_ >= 0).map { last =>
-    versionRounds(math.max(0, oldestRetainedRound.get), last)
-      .map { case (v, rs) => roundFiltered(pageView(pages.read(v), rs.head), rs) }
+    roundVersions(math.max(0, oldestRetainedRound.get), last)
+      .map { case (r, v) => pageView(pages.read(v), r) }
       .reduce(_ unionByName _)
   }
 
@@ -593,59 +508,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     removed
   }
 
-  /** Compact the pages history: merge rounds [lo, hi]'s page versions into
-    * ONE committed version and repoint every entry in the window at it —
-    * the Iceberg rewrite-data-files analog. A snapshot-per-round layout
-    * accumulates one version (= one file set) per round forever; a 10^4-
-    * round crawl pays 10^4 version opens per corpus read without this.
-    * The merged version is range-partitioned and sorted on (fetchRound,
-    * urlHash), so its per-file min/max stats stay TIGHT and
-    * `pagesInRounds`'s readPruned file-prune keeps working across the
-    * compacted window (CompactionSpec pins slice exactness after).
-    *
-    * Crash-safe at every prefix: the merged version commits first
-    * (unreferenced orphan), then each entry repoints atomically WITHOUT
-    * touching the `current` pointer; readers row-filter every version to
-    * the rounds that point at it (`versionRounds`), so a half-repointed
-    * window reads repointed rounds from the merged version and the rest
-    * from their old versions — never both. Re-running completes
-    * idempotently. Replaced versions become unreferenced and fall to the
-    * next `gc`'s reuse-aware floor. Returns the merged version (or the
-    * already-shared version when the window is a single version).
-    * `failAfterRepoints` injects a crash after that many entry rewrites —
-    * the CompactionSpec hook. */
-  def compactPages(lo: Int, hi: Int, failAfterRepoints: Int = Int.MaxValue): Long = {
-    ensureWriterLock()
-    val last = lastCompleteRound.getOrElse(
-      throw new IllegalStateException("call init() first"))
-    val l = math.max(lo, math.max(0, oldestRetainedRound.get))
-    val h = math.min(hi, last)
-    require(l <= h, s"empty compaction window [$lo, $hi] within retention")
-    val vr = versionRounds(l, h)
-    if (vr.size <= 1) return vr.head._1
-    val merged = vr.map { case (v, rs) =>
-        val df = pages.read(v)
-        // legacy versions (never shared) lack fetchRound: stamp from the
-        // round-log so the merged version always file-prunes on it
-        roundFiltered(
-          if (df.columns.contains("fetchRound")) df
-          else df.withColumn("fetchRound", lit(rs.head)), rs)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .repartitionByRange(col("fetchRound"), col("urlHash"))
-      .sortWithinPartitions("fetchRound", "urlHash")
-    val vC = pages.commit(merged)
-    var repointed = 0
-    for (r <- l to h) {
-      if (repointed >= failAfterRepoints)
-        throw new RuntimeException(s"injected kill after $repointed compaction repoints")
-      writeEntryFile(entry(r).copy(pagesV = vC))
-      repointed += 1
-    }
-    heartbeat()
-    vC
-  }
-
   /** Pages crawled in rounds [lo, hi] — the round-sliced corpus read a
     * downstream consumer (e.g. the segmentation aggregation over one
     * crawl window) uses instead of scanning the archive:
@@ -653,10 +515,8 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     *  1. the round LOG selects only the slice's page versions (the
     *     snapshot-level prune — other versions are never opened);
     *  2. each selected version reads through readPruned("fetchRound") —
-    *     the manifest-stats file prune — so even a version whose files
-    *     straddle the slice (a future multi-round compaction of the pages
-    *     table) scans only intersecting files. RoundSliceSpec pins that
-    *     out-of-slice files never reach a scan.
+    *     the manifest-stats file prune — so a file whose stats fall
+    *     outside the slice never reaches a scan (RoundSliceSpec pins it).
     *
     * None when the store has no complete round or the slice is empty. */
   def pagesInRounds(lo: Int, hi: Int): Option[DataFrame] =
@@ -664,72 +524,18 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       val l = math.max(lo, math.max(0, oldestRetainedRound.get)) // gc-trimmed floor
       val h = math.min(hi, last)
       if (l > h) None
-      else versionRounds(l, h).map { case (v, rs) =>
+      else roundVersions(l, h).map { case (r, v) =>
         // A pre-fetchRound version can't file-prune on the column (its
         // files carry no such stats) — but it IS whole-round r's pages and
         // r ∈ [l, h], so whole-version selection via the round log is the
         // exact slice; stamp the column so the union stays uniform.
         if (pages.schemaAt(v).fieldNames.contains("fetchRound"))
-          roundFiltered(pageView(pages.readPruned("fetchRound", lo, hi, v), rs.head), rs)
-        else pageView(pages.read(v), rs.head)
+          pageView(pages.readPruned("fetchRound", lo, hi, v), r)
+        else pageView(pages.read(v), r)
       }.reduceOption(_ unionByName _)
     }
 
   def currentState(): CrawlRound.State = stateAt(lastCompleteRound.get)
-
-  /** The persisted web graph as (src, dst) urlHash edges — derived lazily
-    * from the retained page versions that carry the `links` column (every
-    * round's full fetch log; versions from stores written before the
-    * write-once commit hold the filtered projection, no links, and
-    * contribute no edges). None when no retained version has links. */
-  def linkEdges(): Option[DataFrame] =
-    lastCompleteRound.filter(_ >= 0).flatMap { last =>
-      versionRounds(math.max(0, oldestRetainedRound.get), last).flatMap { case (v, rs) =>
-        if (pages.schemaAt(v).fieldNames.contains("links"))
-          Some(LinkGraph.edges(roundFiltered(pages.read(v), rs)))
-        else None
-      }.reduceOption(_ unionByName _)
-    }
-
-  /** PageRank over the persisted web graph (LinkGraph.pageRank — full
-    * dangling-mass redistribution, Σ pr = 1). None when the store has no
-    * link-carrying page versions. */
-  def pageRank(iters: Int = 3, damping: Double = 0.85): Option[DataFrame] =
-    linkEdges().map(e => LinkGraph.pageRank(spark, e, iters, damping))
-
-  /** Re-prioritize the WAITING frontier from the web graph: every frontier
-    * entry's priority becomes its PageRank (an unranked url — possible
-    * only for never-linked seeds — floors at 0.0), committing the new
-    * frontier version and atomically rewriting the current round's entry,
-    * exactly like `refresh`. The next `runRounds` pops link-importance
-    * order instead of the synthetic base priority — the OPIC-style
-    * priority feedback loop a production crawler runs between crawl
-    * waves. Crash-safe for the same reason as refresh (entry rewrite is
-    * the linearization point). Returns the number of frontier entries
-    * that received a graph rank. */
-  def reprioritizeByRank(iters: Int = 3, damping: Double = 0.85): Long = {
-    ensureWriterLock()
-    val last = lastCompleteRound.getOrElse(
-      throw new IllegalStateException("call init() first"))
-    require(last >= 0, "reprioritizeByRank needs at least one crawled round")
-    val ranks = pageRank(iters, damping).getOrElse(return 0L)
-      .withColumnRenamed("id", "urlHash")
-    val e = entry(last)
-    val st = stateAt(last)
-    def ranked(df: DataFrame): DataFrame = df
-      .join(ranks, Seq("urlHash"), "left")
-      .withColumn("priority", coalesce(col("pr"), lit(0.0)))
-      .select("url", "urlHash", "host", "priority", "depth", "round")
-    val fv = frontier.commit(ranked(st.frontier))
-    // A capped crawl's spill must move to the SAME priority scale, or the
-    // next compaction re-splits active ∪ spill across two incomparable
-    // scales and the "active = global top-cap" invariant silently breaks.
-    val spv = st.spilled.map(sp => spilled.commit(ranked(sp)))
-    writeEntry(e.copy(frontierV = fv,
-      spilledV = spv.getOrElse(e.spilledV)))
-    heartbeat()
-    st.frontier.join(ranks, Seq("urlHash"), "left_semi").count()
-  }
 }
 
 object DurableCrawler {

@@ -5,9 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Real robots.txt parsing (group-aware `*` scope, crawl-delay, global
-  * Sitemap directives) and sitemaps.org ingestion (urlset/sitemapindex),
-  * including rule-equivalence with the JSON loader through the same
-  * filterAllowed path. */
+  * Sitemap directives), including rule-equivalence with the JSON loader
+  * through the same filterAllowed path. */
 class RobotsTxtSitemapSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -55,41 +54,6 @@ class RobotsTxtSitemapSpec extends AnyFunSuite {
     assert(b.getString(0) == "h0.example" && b.getInt(1) == 2)
   }
 
-  test("sitemaps: urlset locs, index indirection, seed assembly") {
-    val urlset =
-      """<?xml version="1.0"?><urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-        |<url><loc> https://h0.example/a </loc><lastmod>2026-01-01</lastmod></url>
-        |<url><loc>https://h0.example/b</loc></url></urlset>""".stripMargin
-    val index =
-      """<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-        |<sitemap><loc>https://h0.example/sitemap-a.xml</loc></sitemap>
-        |<sitemap><loc>https://h0.example/sitemap-b.xml</loc></sitemap></sitemapindex>""".stripMargin
-
-    val locs = Sitemaps.locs(Seq(("https://h0.example/sitemap.xml", urlset)).toDF("url", "xml"))
-      .collect()
-    assert(locs.forall(_.getString(1) == "urlset"))
-    assert(locs.map(_.getString(2)).toSet ==
-      Set("https://h0.example/a", "https://h0.example/b"), "whitespace must trim")
-
-    val idxDf = Seq(("https://h0.example/sitemap.xml", index)).toDF("url", "xml")
-    assert(Sitemaps.childSitemapUrls(idxDf).collect().map(_.getString(0)).toSet ==
-      Set("https://h0.example/sitemap-a.xml", "https://h0.example/sitemap-b.xml"))
-    assert(Sitemaps.seedUrls(idxDf).count() == 0, "an index alone seeds no pages")
-
-    val children = Seq(
-      ("https://h0.example/sitemap-a.xml", urlset),
-      ("https://h0.example/sitemap-b.xml",
-        urlset.replace("/a", "/c").replace("/b", "/d"))).toDF("url", "xml")
-    val seeds = Sitemaps.seedUrls(idxDf, Some(children))
-      .collect().map(_.getString(0)).toSet
-    assert(seeds == Set("https://h0.example/a", "https://h0.example/b",
-      "https://h0.example/c", "https://h0.example/d"))
-
-    // unknown root contributes nothing
-    assert(Sitemaps.seedUrls(Seq(("x", "<html><loc>u</loc></html>")).toDF("url", "xml"))
-      .count() == 0)
-  }
-
   test("fetchRules bootstraps rules from the crawl's own fetcher") {
     import java.nio.charset.StandardCharsets.UTF_8
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
@@ -113,17 +77,5 @@ class RobotsTxtSitemapSpec extends AnyFunSuite {
       Robots.fetchRules(hosts, new graft.fetch.CorpusFetcher(() => corpus)))
       .select("url").collect().map(_.getString(0)).toSet
     assert(allowed == Set("https://h0.example/ok", "https://h2.example/ok"))
-  }
-
-  test("sitemap seeds flow into the frontier through robots filtering") {
-    val urlset =
-      """<urlset><url><loc>https://h0.example/private/x</loc></url>
-        |<url><loc>https://h0.example/ok</loc></url></urlset>""".stripMargin
-    val rules = Robots.parseRobotsTxt(Seq(("h0.example", robotsBody)).toDF("host", "body"))
-    val seedList = Sitemaps.seedUrls(Seq(("s", urlset)).toDF("url", "xml"))
-      .collect().map(_.getString(0)).toSeq.sorted
-    val frontier = Robots.filterAllowed(Frontier.fromSeeds(spark, seedList), rules)
-    assert(frontier.select("url").collect().map(_.getString(0)).toSet ==
-      Set("https://h0.example/ok"))
   }
 }

@@ -46,34 +46,6 @@ class WarcSpec extends AnyFunSuite {
     assert(first._1.startsWith("http"))
   }
 
-  test("streaming ingest picks up new WARC drops incrementally, exactly once") {
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("warcS").toString
-    val half = corpus.filter(xxhash64(col("url")) % 2 === 0)
-    Warc.write(half, dir, nFiles = 2) // batch 1 on disk before the stream starts
-    val q = Warc.readStream(spark, dir)
-      .writeStream.format("memory").queryName("warc_stream")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val n1 = spark.sql("SELECT count(*) FROM warc_stream").head().getLong(0)
-      assert(n1 == half.count())
-      // drop batch 2 (the other half) into the directory mid-stream
-      val rest = corpus.filter(xxhash64(col("url")) % 2 =!= 0)
-      val dir2 = Files.createTempDirectory("warcS2").toString
-      Warc.write(rest, dir2, nFiles = 1)
-      Files.list(java.nio.file.Paths.get(dir2)).iterator().asScala
-        .filter(_.toString.endsWith(".warc.gz"))
-        .foreach(f => Files.move(f,
-          java.nio.file.Paths.get(dir, "drop-" + f.getFileName.toString)))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT url FROM warc_stream").collect()
-        .map(_.getString(0)).sorted.toSeq
-      assert(got == corpus.select("url").collect().map(_.getString(0)).sorted.toSeq,
-        "every url exactly once across both drops")
-    } finally q.stop()
-  }
-
   test("crawl over the WARC-ingested corpus is byte-identical to the generated one") {
     val dir = Files.createTempDirectory("warcC").toString
     Warc.write(corpus, dir)

@@ -32,6 +32,17 @@ class RoundSliceSpec extends AnyFunSuite {
     d
   }
 
+  // Point round `round`'s log entry at pages version `v` — the only way a
+  // test can reproduce a store shape this build never writes itself.
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def repoint(round: Int, v: Long): Unit = {
+    val p = java.nio.file.Paths.get(crawler.root, "roundlog", s"round-$round.json")
+    val n = mapper.readTree(Files.readString(p))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    n.put("pagesV", v)
+    Files.writeString(p, n.toString)
+  }
+
   test("pagesInRounds slices exactly: each slice holds its rounds' pages only") {
     val all = crawler.allPages().get
     val slice1 = crawler.pagesInRounds(1, 1).get
@@ -61,10 +72,7 @@ class RoundSliceSpec extends AnyFunSuite {
     val expectAll = rows(crawler.allPages().get)
     val expectR0 = rows(crawler.pagesInRounds(0, 0).get)
     val expectR1 = rows(crawler.pagesInRounds(1, 1).get)
-    val edgesAll = rows(crawler.linkEdges().get)
     val v1 = crawler.pagesVersionAt(1)
-    val edgesR1 = rows(graft.crawl.LinkGraph.edges(crawler.pages.read(v1)))
-    assert(edgesR1.nonEmpty, "round 1 must carry links for the edge check to bite")
 
     // Old-store shapes, each committed as a new pages version that the
     // round log's pagesV is repointed at (the round log is the only
@@ -73,14 +81,6 @@ class RoundSliceSpec extends AnyFunSuite {
     //    (a column-less copy);
     //  - round 1 as written before the write-once commit: the filtered
     //    projection (status 200, the 12 page columns, no links).
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def repoint(round: Int, v: Long): Unit = {
-      val p = java.nio.file.Paths.get(crawler.root, "roundlog", s"round-$round.json")
-      val n = mapper.readTree(Files.readString(p))
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      n.put("pagesV", v)
-      Files.writeString(p, n.toString)
-    }
     repoint(0, crawler.pages.commit(
       crawler.pages.read(crawler.pagesVersionAt(0)).drop("fetchRound")))
     repoint(1, crawler.pages.commit(crawler.pages.read(v1)
@@ -99,7 +99,17 @@ class RoundSliceSpec extends AnyFunSuite {
     assert(rows(crawler.pagesInRounds(1, 1).get) == expectR1)
     // a slice excluding round 0 must not read the column-less version at all
     assert(crawler.pagesInRounds(1, 2).get.filter(col("fetchRound") === 0).count() == 0)
-    // linkEdges skips the link-less version: exactly round 1's edges drop
-    assert(rows(crawler.linkEdges().get) == edgesAll.diff(edgesR1))
+  }
+
+  test("rounds sharing a pages version (a compacted store) fail fast on read") {
+    val v1 = crawler.pagesVersionAt(1)
+    repoint(1, crawler.pagesVersionAt(0))
+    try {
+      for (read <- Seq(() => crawler.allPages(), () => crawler.pagesInRounds(0, 1))) {
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains("pages compaction"), e.getMessage)
+      }
+    } finally repoint(1, v1)
+    assert(crawler.allPages().isDefined)
   }
 }
