@@ -21,7 +21,7 @@ object Relational {
       |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
     lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(ordered(_, "l_orderkey", "l_linenumber"))
   }
 
   private val filterPushdown = Q(
@@ -32,13 +32,13 @@ object Relational {
     lineitem(s, d)
       .filter(col("l_quantity") >= 45 && col("l_returnflag") === "R")
       .select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(ordered(_, "l_orderkey", "l_linenumber"))
   }
 
   private val projectPrune = Q(
     "project_prune",
     "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_orderkey") { (s, d) =>
-    orders(s, d).select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
+    orders(s, d).select("o_orderkey", "o_totalprice").transform(ordered(_, "o_orderkey"))
   }
 
   // ----------------------------------------------------------- aggregates
@@ -54,13 +54,13 @@ object Relational {
       count(lit(1)).as("n_docs"),
       round(avg("n_chars"), 4).as("avg_chars"),
       sum("n_chars").cast("long").as("total_chars"))
-      .orderBy("lang")
+      .transform(ordered(_, "lang"))
   }
 
   private val aggCountByKey = Q(
     "agg_count_by_key",
     "SELECT source, count(*) AS n FROM documents GROUP BY source ORDER BY source") { (s, d) =>
-    documents(s, d).groupBy("source").agg(count(lit(1)).as("n")).orderBy("source")
+    documents(s, d).groupBy("source").agg(count(lit(1)).as("n")).transform(ordered(_, "source"))
   }
 
   private val aggDistinct = Q(
@@ -68,7 +68,7 @@ object Relational {
     """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, d) =>
     lineitem(s, d).select("l_returnflag", "l_linestatus")
-      .distinct().orderBy("l_returnflag", "l_linestatus")
+      .distinct().transform(ordered(_, "l_returnflag", "l_linestatus"))
   }
 
   /** A4 — approximate (HLL++); engine-specific, no SQL oracle. */
@@ -87,7 +87,7 @@ object Relational {
     lineitem(s, d).rollup("l_returnflag", "l_linestatus").agg(
       count(lit(1)).as("n"),
       round(sum("l_quantity"), 2).as("qty"))
-      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
+      .transform(ordered(_, asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")))
   }
 
   /** A8 — max_by with a UNIQUE ordering key (o_orderkey) so ties cannot
@@ -101,7 +101,7 @@ object Relational {
     orders(s, d).groupBy("o_orderstatus").agg(
       max_by(col("o_custkey"), col("o_orderkey")).as("last_cust"),
       max("o_orderkey").cast("long").as("max_key"))
-      .orderBy("o_orderstatus")
+      .transform(ordered(_, "o_orderstatus"))
   }
 
   // ---------------------------------------------------------------- joins
@@ -120,7 +120,7 @@ object Relational {
       .groupBy("r_name").agg(
         count(lit(1)).as("n_cust"),
         round(sum("c_acctbal"), 1).as("bal"))
-      .orderBy("r_name")
+      .transform(ordered(_, "r_name"))
   }
 
   /** J1b — fact ⋈ two broadcast dims (part, supplier): the classic star
@@ -140,7 +140,7 @@ object Relational {
       .join(broadcast(supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("p_brand"), col("s_nationkey").as("nat"))
       .agg(count(lit(1)).as("n"), sum("l_quantity").cast("long").as("qty"))
-      .orderBy("p_brand", "nat")
+      .transform(ordered(_, "p_brand", "nat"))
   }
 
   /** J2 — fact⋈fact equi join; Catalyst/AQE picks SMJ or SHJ. Sum rounded to
@@ -156,7 +156,7 @@ object Relational {
       .groupBy("o_orderstatus").agg(
         count(lit(1)).as("n"),
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 0).as("revenue"))
-      .orderBy("o_orderstatus")
+      .transform(ordered(_, "o_orderstatus"))
   }
 
   /** J3 — left anti: the exact layer of the URL-seen set (SURVEY.md §2.4). */
@@ -167,7 +167,7 @@ object Relational {
       |ORDER BY c.c_custkey""".stripMargin) { (s, d) =>
     customer(s, d)
       .join(orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name").orderBy("c_custkey")
+      .select("c_custkey", "c_name").transform(ordered(_, "c_custkey"))
   }
 
   private val joinSemi = Q(
@@ -179,7 +179,7 @@ object Relational {
     customer(s, d).join(
       orders(s, d).filter(col("o_totalprice") > 400000),
       col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey", "c_acctbal").orderBy("c_custkey")
+      .select("c_custkey", "c_acctbal").transform(ordered(_, "c_custkey"))
   }
 
   /** J6 — latest row per key ("as-of" style): window rank with a fully
@@ -206,7 +206,7 @@ object Relational {
       .select(col("l_orderkey"),
         col("m.l_linenumber").as("l_linenumber"),
         col("m.l_shipdate").as("l_shipdate"))
-      .orderBy("l_orderkey")
+      .transform(ordered(_, "l_orderkey"))
   }
 
   /** J7 — non-equi (theta) join on a deliberately tiny table: BNLJ. */
@@ -221,7 +221,7 @@ object Relational {
     val n2 = nation(s, d).select(
       col("n_nationkey").as("k2"), col("n_regionkey").as("r2"), col("n_name").as("b"))
     n1.join(n2, col("r1") === col("r2") && col("k1") < col("k2"))
-      .select("a", "b").orderBy("a", "b")
+      .select("a", "b").transform(ordered(_, "a", "b"))
   }
 
   // -------------------------------------------------------------- windows
@@ -239,7 +239,7 @@ object Relational {
     customer(s, d).withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select("c_nationkey", "c_custkey", "c_acctbal", "rnk")
-      .orderBy("c_nationkey", "rnk")
+      .transform(ordered(_, "c_nationkey", "rnk"))
   }
 
   private val windowRunningSum = Q(
@@ -254,7 +254,7 @@ object Relational {
     events(s, d)
       .select(col("user_id"), col("event_id"),
         round(sum("value").over(w), 2).as("running"))
-      .orderBy("user_id", "event_id")
+      .transform(ordered(_, "user_id", "event_id"))
   }
 
   private val windowMovingAvg = Q(
@@ -268,7 +268,7 @@ object Relational {
     events(s, d)
       .select(col("user_id"), col("event_id"),
         round(avg("value").over(w), 4).as("mavg"))
-      .orderBy("user_id", "event_id")
+      .transform(ordered(_, "user_id", "event_id"))
   }
 
   /** W1/T4-adjacent — gap-based sessionization as a batch window job:
@@ -297,7 +297,7 @@ object Relational {
       .withColumn("session_id", sum("new_sess").over(byUser).cast("long"))
       .groupBy("user_id", "session_id")
       .agg(count(lit(1)).as("n_events"), min("ts").as("session_start"))
-      .orderBy("user_id", "session_id")
+      .transform(ordered(_, "user_id", "session_id"))
   }
 
   /** T1 — tumbling 1h window as batch aggregation (epoch-aligned, so
@@ -311,7 +311,7 @@ object Relational {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
       .select(col("w.start").as("win_start"), col("event_type"), col("n"), col("total"))
-      .orderBy("win_start", "event_type")
+      .transform(ordered(_, "win_start", "event_type"))
   }
 
   private val sortGlobal = Q(
@@ -346,7 +346,7 @@ object Relational {
       col("o_orderkey").as("urlHash"), col("o_totalprice").as("priority"))
     val (top, _, _) = graft.crawl.Frontier.splitTopByPriority(df, 500L)
     top.select(col("urlHash"), round(col("priority"), 2).as("price"))
-      .orderBy("urlHash")
+      .transform(ordered(_, "urlHash"))
   }
 
   // -------------------------------------------------------------- set ops
@@ -358,7 +358,7 @@ object Relational {
       |ORDER BY k""".stripMargin) { (s, d) =>
     customer(s, d).filter(col("c_acctbal") < 0).select(col("c_custkey").as("k"))
       .union(orders(s, d).filter(col("o_totalprice") > 450000).select(col("o_custkey").as("k")))
-      .distinct().orderBy("k")
+      .distinct().transform(ordered(_, "k"))
   }
 
   private val setopExcept = Q(
@@ -368,7 +368,7 @@ object Relational {
       |ORDER BY k""".stripMargin) { (s, d) =>
     customer(s, d).select(col("c_custkey").as("k"))
       .except(orders(s, d).select(col("o_custkey").as("k")))
-      .orderBy("k")
+      .transform(ordered(_, "k"))
   }
 
   // ----------------------------------------------- scalar function families
@@ -410,7 +410,7 @@ object Relational {
         regexp_extract(col("text"), "(key|agg) (row|scan|join)", 1).as("hit"),
         regexp_replace(col("text"), "[aeiou]", "_").like("%t_bl_%").as("has_table"),
         size(expr("regexp_extract_all(text, 'value', 0)")).cast("long").as("n_value"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // `day` is an ISO STRING on BOTH sides: Spark's date_trunc returns
@@ -430,7 +430,7 @@ object Relational {
       hour(col("ts")).cast("long").as("hr"),
       month(col("ts")).cast("long").as("mo"),
       unix_timestamp(col("ts")).as("epoch_s"))
-      .orderBy("event_id")
+      .transform(ordered(_, "event_id"))
   }
 
   /** F4 — only IEEE-exact math ops (sqrt/abs/floor/ceil/mod), so the
@@ -451,7 +451,7 @@ object Relational {
       floor(col("l_extendedprice")).cast("double").as("floor_price"),
       ceil(col("l_extendedprice")).cast("double").as("ceil_price"),
       (col("l_orderkey") % 7).cast("long").as("bucket"))
-      .orderBy("l_orderkey", "l_linenumber")
+      .transform(ordered(_, "l_orderkey", "l_linenumber"))
   }
 
   private val scalarArray = Q(
@@ -467,7 +467,7 @@ object Relational {
       element_at(col("embedding"), 1).cast("double").as("first_v"),
       element_at(col("embedding"), 64).cast("double").as("last_v"),
       col("label").cast("long").as("label"))
-      .orderBy("vec_id")
+      .transform(ordered(_, "vec_id"))
   }
 
   /** F6 — map build + extract; the oracle computes the scalar directly
@@ -482,7 +482,7 @@ object Relational {
         col("doc_id"),
         element_at(col("m"), "lang").as("lang_v"),
         element_at(col("m"), "src").as("src_v"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   private val scalarJson = Q(
@@ -492,7 +492,7 @@ object Relational {
     events(s, d).select(
       col("event_id"),
       get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .orderBy("event_id")
+      .transform(ordered(_, "event_id"))
   }
 
   private val scalarCond = Q(
@@ -509,7 +509,7 @@ object Relational {
         .when(col("o_totalprice") > 100000, "mid")
         .otherwise("small").as("size_band"),
       coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("status"))
-      .orderBy("o_orderkey")
+      .transform(ordered(_, "o_orderkey"))
   }
 
   /** F8/P2 — 64-bit hashing for URL-seen keys. xxhash64 is Spark-specific;
@@ -521,7 +521,7 @@ object Relational {
       xxhash64(col("text"), col("lang")).as("seeded_hash"),
       hash(col("text")).cast("long").as("murmur"),
       crc32(col("text").cast("binary")).as("crc"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** P3 — host extraction from a synthesized URL column (the test tables
@@ -538,7 +538,7 @@ object Relational {
         concat(lit("https://"), col("source"), lit(".example.com/docs/"),
           col("doc_id").cast("string"), lit("?ref=x#frag")))
       .select(col("doc_id"), parse_url(col("url"), lit("HOST")).as("host"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** E1 — token/link extraction via regexp + explode (generator). */
@@ -620,7 +620,7 @@ object Relational {
     ranks
       .crossJoin(broadcast(nodes.agg(count(lit(1)).cast("long").as("n2"))))
       .select(col("doc_id"), round(col("r") * col("n2"), 6).as("pr"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   val all: Seq[Q] = Seq(

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped memo for intermediates shared across queries.
   *
@@ -31,16 +32,38 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpointed block lost with its executor cannot be recomputed — the
   * crawl state accepts the same, and this engine runs at `local[N]`.
   *
-  * Lifecycle: the first insertion for a session registers an
-  * ApplicationEnd listener on its SparkContext that drops that session's
-  * entries — without it the map rows (and the blocks they own) would
+  * The same map shape memoizes table schemas ([[schema]]), so a table
+  * file's schema is inferred once per session, not once per scan.
+  *
+  * Lifecycle: the first insertion for a session (memo or schema) registers
+  * ONE ApplicationEnd listener on its SparkContext that drops that
+  * session's entries — without it the map rows (and the blocks they own) would
   * outlive the session in a multi-session JVM. The listener body is
   * [[invalidate]], also callable directly (SessionCacheSpec drives it).
   */
 object SessionCache {
 
   private val cache = new ConcurrentHashMap[(String, String), DataFrame]()
+  private val schemas = new ConcurrentHashMap[(String, String), StructType]()
   private val hooked = ConcurrentHashMap.newKeySet[String]()
+
+  /** The session's key, registering its one ApplicationEnd listener on the
+    * first call. */
+  private def hook(s: SparkSession): String = {
+    val sk = sessionKey(s)
+    if (hooked.add(sk))
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          invalidateKey(sk, unhook = true)
+      })
+    sk
+  }
+
+  /** Memoized `infer` for this session: a table file's schema, `key`
+    * naming the file's contents (`Tables.load` passes its qualified path,
+    * length and modification time). Dropped with the session's memos. */
+  def schema(s: SparkSession, key: String)(infer: => StructType): StructType =
+    schemas.computeIfAbsent((hook(s), key), _ => infer)
 
   /** Memoized `build.localCheckpoint(eager = true)` for this session —
     * `key` must encode every input that changes the result (the data dir,
@@ -48,12 +71,7 @@ object SessionCache {
     * identityHashCode key could collide with a stopped session's and hand
     * out data bound to a dead SparkContext). */
   def df(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val sk = sessionKey(s)
-    if (hooked.add(sk))
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-          invalidateKey(sk, unhook = true)
-      })
+    val sk = hook(s)
     // get-then-putIfAbsent, NOT computeIfAbsent: a builder that itself
     // consults the cache (a memoized table built from another memoized
     // table) would nest map mutations inside computeIfAbsent's bin lock —
@@ -75,8 +93,9 @@ object SessionCache {
     }
   }
 
-  /** Release and drop every entry of `s` — the ApplicationEnd listener's
-    * body. Safe to call on a live session: later df() calls rebuild. */
+  /** Release and drop every entry of `s`, memos and schemas — the
+    * ApplicationEnd listener's body. Safe to call on a live session: later
+    * df() calls rebuild and later schema() calls infer again. */
   def invalidate(s: SparkSession): Unit = invalidateKey(sessionKey(s), unhook = false)
 
   /** `unhook` is true ONLY from the ApplicationEnd listener: a direct
@@ -90,6 +109,7 @@ object SessionCache {
     cache.keySet.asScala.filter(_._1 == sk).toSeq.foreach { k =>
       Option(cache.remove(k)).foreach(release)
     }
+    schemas.keySet.removeIf(_._1 == sk)
     if (unhook) hooked.remove(sk)
   }
 

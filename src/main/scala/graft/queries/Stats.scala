@@ -22,7 +22,7 @@ object Stats {
       round(var_samp(col("l_discount")), 6).as("var_disc"),
       round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qp"),
       round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"))
-      .orderBy("l_returnflag")
+      .transform(ordered(_, "l_returnflag"))
   }
 
   private val aggPercentile = Q(
@@ -38,7 +38,7 @@ object Stats {
     orders(s, d).groupBy("o_orderstatus").agg(
       round(expr("percentile(o_totalprice, 0.5)"), 4).as("p50"),
       round(expr("percentile(o_totalprice, 0.9)"), 4).as("p90"))
-      .orderBy("o_orderstatus")
+      .transform(ordered(_, "o_orderstatus"))
   }
 
   val all: Seq[Q] = Seq(aggStats, aggPercentile)

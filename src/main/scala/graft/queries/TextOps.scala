@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
 
@@ -216,7 +216,7 @@ object TextOps {
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(round(col("top_bg").cast("double") / col("n_bigrams"), 4), lit(0.0))
           .as("top_bigram_frac"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // ------------------------------------------- deterministic hash sample
@@ -237,7 +237,7 @@ object TextOps {
       .filter(substring(md5(concat(lit("sample:"), col("doc_id").cast("string"))), 1, 1)
         .isin("0", "1", "2"))
       .select("doc_id", "lang", "source")
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // --------------------------------------------------------- PII redaction
@@ -344,7 +344,7 @@ object TextOps {
     g.filter(col("doc_id") % DECON_EVAL_MOD =!= 0)
       .join(broadcast(ev), Seq("g"))
       .groupBy("doc_id").agg(countDistinct(col("g")).as("n_overlap"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // ------------------------------------------------------------- dedup
@@ -356,7 +356,7 @@ object TextOps {
       min("doc_id").cast("long").as("keeper"),
       count(lit(1)).as("n_copies"))
       .select("keeper", "n_copies", "text")
-      .orderBy("keeper")
+      .transform(ordered(_, "keeper"))
   }
 
   /** C4-style GLOBAL segment-level dedup (Raffel et al. 2020 §2.2 do it
@@ -425,7 +425,7 @@ object TextOps {
       .select(col("doc_id"), col("n_segs"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("clean_text"), lit("")).as("clean_text"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** Word 3-shingles of a document, with ANSI-safe bounds. */
@@ -551,7 +551,7 @@ object TextOps {
     // exact ground truth.
     ngramJaccardPairs(s, d, JACCARD_TAU)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy("id_a", "id_b")
+      .transform(ordered(_, "id_a", "id_b"))
   }
 
   /** D7 — dedup CLUSTER formation: near-dup detection emits PAIRS, but a
@@ -612,22 +612,23 @@ object TextOps {
       val nbrMin = sym
         .join(labels.select(col("doc_id").as("src"), col("cluster").as("nc")), "src")
         .groupBy(col("dst").as("doc_id")).agg(min("nc").as("nbrMin"))
-      // carry (new, old) in ONE checkpointed frame: the convergence probe
-      // reads `changed` off it directly instead of re-joining next⋈labels —
-      // one join per sweep, not two (each sweep is a synchronous job wave)
+      // the convergence probe is an observed count on the checkpoint job
+      // that materializes the sweep (a label changes iff a neighbour's is
+      // smaller): one job per sweep, not a second probe job
+      val changed = Observation()
       val next = labels.join(nbrMin, Seq("doc_id"), "left")
+        .observe(changed, count_if(col("nbrMin") < col("cluster")).as("n"))
         .select(col("doc_id"),
-          least(col("cluster"), coalesce(col("nbrMin"), col("cluster"))).as("cluster"),
-          col("cluster").as("old"))
+          least(col("cluster"), coalesce(col("nbrMin"), col("cluster"))).as("cluster"))
         .localCheckpoint(true)
-      converged = next.filter(col("cluster") =!= col("old")).isEmpty
+      converged = changed.get("n") == 0L
       labels.unpersist() // cosmetic for checkpoints; blocks are GC-reclaimed
-      labels = next.select(col("doc_id"), col("cluster"))
+      labels = next
     }
     sym.unpersist()
     labels.select(col("doc_id"), col("cluster"),
       (col("doc_id") === col("cluster")).as("is_keeper"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // MinHash/SimHash/LSH tunables live in graft.queries.{MinHashParams,
@@ -939,7 +940,7 @@ object TextOps {
     documents(s, d).select(
       col("doc_id"),
       graft.expr.Extractors.extract_10k(tenK(col("doc_id"), col("text"))).as("item7"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** X2 as the custom map-valued expression, scalars pulled back out so
@@ -961,7 +962,7 @@ object TextOps {
         element_at(col("m"), "revenue").as("revenue"),
         element_at(col("m"), "net_income").as("net_income"),
         element_at(col("m"), "year").cast("long").as("year"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** P1 — URL canonicalization over synthesized noisy URLs. The oracle
@@ -990,7 +991,7 @@ object TextOps {
     documents(s, d)
       .select(col("doc_id"),
         graft.expr.CanonicalizeUrl.canonicalize_url(noisy).as("canonical"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   // ------------------------------------------------------- html → text
@@ -1037,7 +1038,7 @@ object TextOps {
       ascii(substring(col("text"), 1, 1)).cast("long").as("first_byte"),
       (length(blob) % 640).cast("long").as("fake_width"),
       ((ascii(substring(col("text"), 1, 1)) * 3) % 480).cast("long").as("fake_height"))
-      .orderBy("doc_id")
+      .transform(ordered(_, "doc_id"))
   }
 
   /** Sorted doc ids as a Dataset[Long] — the shared head of the multimodal

@@ -57,7 +57,7 @@ object VectorOps {
       round(norm(col("embedding")), 6).as("l2"),
       round(aggregate(col("embedding"), lit(0.0),
         (acc, x) => acc + abs(x.cast("double"))), 6).as("l1"))
-      .orderBy("vec_id")
+      .transform(ordered(_, "vec_id"))
   }
 
   private val vectorAvgByLabel = Q(
@@ -68,7 +68,7 @@ object VectorOps {
     embeddings(s, d).groupBy(col("label").cast("long").as("label")).agg(
       count(lit(1)).as("n"),
       round(avg(element_at(col("embedding"), 1).cast("double")), 6).as("avg_first"))
-      .orderBy("label")
+      .transform(ordered(_, "label"))
   }
 
   // ------------------------------------------------- brute-force top-k
@@ -91,7 +91,7 @@ object VectorOps {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= k)
         .select(col("q_id"), col("c_id"), round(col("cos"), 6).as("cos"), col("rnk"))
-        .orderBy("q_id", "rnk")
+        .transform(ordered(_, "q_id", "rnk"))
     }
 
   private def embWithNorm(s: SparkSession, d: String): DataFrame =
@@ -268,7 +268,7 @@ object VectorOps {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("c_id"), round(col("cos"), 6).as("cos"), col("rnk"))
-      .orderBy("q_id", "rnk")
+      .transform(ordered(_, "q_id", "rnk"))
   }
 
   private val annIvfTopk = Q.noOracle("ann_ivf_topk")(ivfTopk(_, _))
@@ -283,7 +283,7 @@ object VectorOps {
       .groupBy("q_id").agg(count(lit(1)).as("hits"))
       .join(bf.groupBy("q_id").agg(count(lit(1)).as("k")), Seq("q_id"), "right")
       .select(col("q_id"), round(coalesce(col("hits"), lit(0L)) / col("k"), 4).as("recall"))
-      .orderBy("q_id")
+      .transform(ordered(_, "q_id"))
   }
 
   private val annRecall =

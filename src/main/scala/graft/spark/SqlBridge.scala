@@ -26,8 +26,12 @@ object GraftSqlBridge {
   def fireApplicationEnd(s: SparkSession): Unit = {
     s.sparkContext.listenerBus.post(
       org.apache.spark.scheduler.SparkListenerApplicationEnd(System.currentTimeMillis()))
-    s.sparkContext.listenerBus.waitUntilEmpty()
+    drainListenerBus(s)
   }
+
+  /** Test hook: block until every event posted so far has reached the
+    * listeners, so a count a listener keeps is complete. */
+  def drainListenerBus(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Test hook: how many registered bus listeners have `nameFragment` in
     * their class name — SessionCacheSpec pins that invalidate-then-df

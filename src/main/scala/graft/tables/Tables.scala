@@ -1,6 +1,10 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, UnionExec}
+import graft.queries.SessionCache
 
 /** Loaders for the driver-generated test tables (TESTDATA.md / FIXTURES.md §1).
   *
@@ -9,8 +13,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * full pushdown/pruning (SURVEY.md §2.1 S1).
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** A parquet scan of `<sfDir>/<name>.parquet` read with a known schema.
+    * `spark.read.parquet` infers the schema with a Spark job of its own on
+    * every call; a registry pass loads its ten tables ~94 times. The schema
+    * is inferred once per session and file contents — keyed by the
+    * qualified path, the total length and the latest modification time of
+    * the files under it, so a file rewritten in place is inferred again —
+    * and the read reuses it (the idiom `SnapshotTable.read` applies to its
+    * manifest schema). The memo lives in [[SessionCache]] and is dropped
+    * with the session's other entries. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = SessionCache.schema(spark, stamp(spark, path))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** `qualified path:total length:latest modification time` over the files
+    * at `path` (a file lists itself, a directory its files). */
+  private def stamp(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listFiles(p, true)
+    var len = 0L
+    var mtime = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      len += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    s"${fs.makeQualified(p)}:$len:$mtime"
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
@@ -36,14 +69,27 @@ object Tables {
     * exchange moves KBs. Parameterised by defaultParallelism, never a
     * constant.
     *
-    * Precondition: `df` is shuffle-free (scans, and projections, filters
-    * and unions over them, or a SessionCache memo). The split count is
-    * probed through `df.rdd`, which finalizes the child's physical plan:
-    * under AQE a child with an exchange would run that shuffle stage on
-    * the driver's call, while the query is still being built. */
+    * The split count is read off the planned (never executed) physical
+    * plan's leaves — see [[splits]] — so building a query runs no job. */
   def fanOut(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
+    if (splits(df.queryExecution.sparkPlan).exists(_ >= p)) df else df.repartition(p)
+  }
+
+  /** Partitions `plan` yields, from its leaves' input RDDs (a file scan's
+    * splits, a checkpointed memo's RDD) through narrow unary operators and
+    * unions (the sum). None once a node needs its child shuffled: AQE sizes
+    * that shuffle when it runs, so its count is not known while the query
+    * is being built, and `fanOut` then widens. */
+  private def splits(plan: SparkPlan): Option[Int] = plan match {
+    case u: UnionExec =>
+      val parts = u.children.map(splits)
+      if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
+    case leaf: CodegenSupport if leaf.children.isEmpty =>
+      Some(leaf.inputRDDs().map(_.getNumPartitions).sum)
+    case n if n.requiredChildDistribution == Seq(UnspecifiedDistribution) =>
+      splits(n.children.head)
+    case _ => None
   }
 
   /** Globally-ordered fan-out (the sort-first pattern's exchange): range
@@ -60,5 +106,32 @@ object Tables {
     import org.apache.spark.sql.functions.col
     val p = df.sparkSession.sparkContext.defaultParallelism
     df.repartitionByRange(p, col(key)).sortWithinPartitions(key)
+  }
+
+  /** A query's final sort: the rows and row order of `df.orderBy(cols*)`.
+    * A global sort range-partitions, and its RangePartitioner runs a
+    * sampling job on the driver's call before the query's own job, for
+    * boundaries that a small result does not need. So a result whose
+    * analyzed size estimate is at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold` is gathered into ONE partition
+    * (a SinglePartition exchange, read in map order) and sorted there, and
+    * only a bigger one takes `orderBy`. The broadcast threshold is the
+    * session's existing bound on what one task may hold whole: a relation
+    * under it is already shipped to every task as a broadcast. The
+    * analyzed estimate needs no extra optimizer pass; without CBO a join's
+    * estimate is the product of its sides, so joins mostly keep the range
+    * path. Keep `orderBy` where it is planned without a range exchange
+    * (`orderBy(…).limit(n)`, a TakeOrderedAndProject), inside windows, and
+    * in `sort_global`, the registry's global-sort operator. */
+  def ordered(df: DataFrame, cols: Column*): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (df.queryExecution.analyzed.stats.sizeInBytes <= limit)
+      df.repartition(1).sortWithinPartitions(cols: _*)
+    else df.orderBy(cols: _*)
+  }
+
+  def ordered(df: DataFrame, col: String, cols: String*): DataFrame = {
+    import org.apache.spark.sql.functions.{col => c}
+    ordered(df, (col +: cols).map(c): _*)
   }
 }
