@@ -32,30 +32,19 @@ object CrawlRound {
     *
     *   failed:       (url, urlHash, host, priority, depth, failRound) —
     *                 full frontier shape, so retry re-enqueues directly
-    *   cuckooShards: (shardId, bits, numKeys) — prefilter of failed
-    *   spilled:      frontier-shaped overflow beyond cfg.frontierCap
-    *                 (compaction — lowest-priority entries wait here and
-    *                 re-admit as the active frontier drains); None when no
-    *                 cap is configured
-    *
-    * frontierSize/spilledSize are maintained ARITHMETICALLY from the
-    * round counters (-1 = unknown → counted once when a cap first
-    * applies), so the compaction policy never adds count() jobs. */
+    *   cuckooShards: (shardId, bits, numKeys) — prefilter of failed */
   case class State(frontier: DataFrame, seenExact: DataFrame, bloomShards: DataFrame,
                    failed: DataFrame, cuckooShards: DataFrame,
-                   spilled: Option[DataFrame] = None,
-                   frontierSize: Long = -1L, spilledSize: Long = -1L,
-                   /** Size of `failed`, maintained arithmetically (−1 =
-                     * unknown). 0 lets a clean round skip the whole
+                   /** Size of `failed`, maintained arithmetically from the
+                     * round counters. 0 lets a clean round skip the whole
                      * deletable-subset machinery: no cuckoo shard collect
                      * job, no cuckoo probe term, no failed-side anti-joins
                      * — per-round driver actions are the Amdahl fixed cost
                      * that caps scaling efficiency at high parallelism. */
-                   failedSize: Long = -1L,
-                   /** Rows in `seenExact`, maintained arithmetically (−1 =
-                     * unknown → counted once, then carried). Drives the
-                     * bloom growth guard. */
-                   seenSize: Long = -1L,
+                   failedSize: Long,
+                   /** Rows in `seenExact`, maintained arithmetically.
+                     * Drives the bloom growth guard. */
+                   seenSize: Long,
                    /** Keys-per-shard geometry the STANDING bloom shards
                      * were built for (−1 = cfg.expectedKeysPerShard). The
                      * guard doubles it when the seen set outgrows it —
@@ -209,12 +198,9 @@ object CrawlRound {
     // grows forever — an unguarded incremental OR-merge saturates the
     // filter (fpp → 1) and the prefilter silently stops rerouting work.
     // All-arithmetic trigger (no extra jobs: seenSize rides the fetch
-    // counters; one count() only when resuming a store that predates the
-    // field), geometric doubling so total rebuild cost over a crawl's
+    // counters), geometric doubling so total rebuild cost over a crawl's
     // lifetime is O(final seen size).
-    val seenSize2 =
-      if (state.seenSize >= 0) state.seenSize + nFetched
-      else state.seenExact.count() + nFetched // pre-field store resume, once
+    val seenSize2 = state.seenSize + nFetched
     val standingCap =
       if (state.bloomKeysPerShard > 0) state.bloomKeysPerShard
       else cfg.expectedKeysPerShard
@@ -310,9 +296,8 @@ object CrawlRound {
     // ride the single deferred lineage job — a serial expand-count wave
     // was pure per-round driver fixed cost (the Amdahl fraction the
     // scaling bench exposes).
-    // failedSize after this round's failures (arithmetic; -1 stays unknown).
-    val failedSize2 =
-      if (state.failedSize >= 0) state.failedSize + nFailed else -1L
+    // failedSize after this round's failures (arithmetic).
+    val failedSize2 = state.failedSize + nFailed
     val rawCandidates = Frontier.expandFromLinks(fetched).persist(StorageLevel.MEMORY_AND_DISK)
     val allowed = Robots.filterAllowed(rawCandidates, robots)
     // Anti vs the CHECKPOINTED input frontier, not `remaining`: frontier =
@@ -334,99 +319,31 @@ object CrawlRound {
       cuckooArrF.map(Await.result(_, Duration.Inf)),
       exactBig = exactBig,
       exactSmall = Nil, nShards = cfg.nShards)
-    // The spill table holds frontier members too (just inactive ones), so
-    // candidate dedup must anti-join it as well — it is committed bucketed
-    // by urlHash like the frontier, keeping the chain one-exchange. The
-    // ok/fail deltas ride the same chain as broadcast antis (they apply to
-    // ALL candidates, not just the maybe-seen remainder — see above).
-    val frontierMembers = Seq(state.frontier) ++ state.spilled.toSeq
+    // The standing frontier is committed bucketed by urlHash, keeping the
+    // chain one-exchange. The ok/fail deltas ride the same chain as
+    // broadcast antis (they apply to ALL candidates, not just the
+    // maybe-seen remainder — see above).
     val exactSmall = Seq(okHashes) ++ failRowsOpt.toSeq
-    val newEntries = Seen.antiChain(deduped, frontierMembers, exactSmall)
+    val newEntries = Seen.antiChain(deduped, Seq(state.frontier), exactSmall)
       .withColumn("round", lit(round + 1))
       .select("url", "urlHash", "host", "priority", "depth", "round")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Only a CAPPED frontier needs nEnqueued on the driver before the
-    // commit (the compaction branch below shapes the frontier plan from
-    // it); the uncapped path defers the dedup count into the fused lineage
-    // job like the expand count.
-    val enqPartsEager: Option[Seq[(Int, Long)]] =
-      if (cfg.frontierCap.isEmpty) None
-      else Some(newEntries.groupBy(spark_partition_id().as("pid"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
-
     val frontier2 = remaining.unionByName(newEntries)
 
-    // Frontier compaction (cfg.frontierCap). A compaction round re-splits
-    // the UNION of active ∪ spill at the cap, so the active set is always
-    // the exact global top-cap of every standing frontier member — spilled
-    // entries re-admit automatically the moment they outrank the active
-    // floor (no separate re-admission pass, no priority inversions between
-    // spill and active after a compaction). Hysteresis bounds the cost:
-    // compaction fires only when the active set OVERFLOWS the cap, or has
-    // drained below cap/2 with spill waiting — between firings the spill
-    // is not scanned, rewritten, or checkpointed at all. Sizes are
-    // maintained arithmetically from this round's counters (one count()
-    // only on the first capped round); `evicted`/`readmitted` lineage
-    // counters are the NET active→spill / spill→active flow.
-    val (frontier3, spilled2, frontierSize2, spilledSize2, nEvicted, nReadmitted) =
-      cfg.frontierCap match {
-        case None =>
-          state.spilled match {
-            case Some(sp) =>
-              // Cap REMOVED on a store that had spilled (resume with a
-              // different config): fold the whole spill back into the
-              // active frontier once — a passed-through spill would never
-              // pop, silently stranding its URLs forever.
-              val n = if (state.spilledSize >= 0) state.spilledSize else sp.count()
-              (frontier2.unionByName(sp), None, -1L, -1L, 0L, n)
-            case None => (frontier2, None, -1L, -1L, 0L, 0L)
-          }
-        case Some(cap) =>
-          val nEnqueued = enqPartsEager.get.map(_._2).sum
-          val fSize =
-            if (state.frontierSize >= 0) state.frontierSize - nPopped + nEnqueued
-            else frontier2.count() // first capped round only
-          val spSize =
-            if (state.spilledSize >= 0) state.spilledSize
-            else state.spilled.map(_.count()).getOrElse(0L)
-          // max(1, cap/2): integer division at cap=1 would make the
-          // re-admission threshold 0, so a fully drained active frontier
-          // (fSize=0) could never re-admit waiting spill — stranding those
-          // URLs forever and breaking eventual completeness.
-          val needCompact = fSize > cap || (fSize < math.max(1L, cap / 2) && spSize > 0)
-          if (!needCompact) (frontier2, state.spilled, fSize, spSize, 0L, 0L)
-          else {
-            val members = state.spilled.map(frontier2.unionByName).getOrElse(frontier2)
-            val (active, rest, nRest) = Frontier.splitTopByPriority(members, cap)
-            val fSize2 = math.min(cap, fSize + spSize)
-            val spDelta = nRest - spSize
-            (active, if (nRest > 0 || state.spilled.isDefined) Some(rest) else None,
-              fSize2, nRest,
-              math.max(spDelta, 0L), math.max(-spDelta, 0L))
-          }
-      }
-
     // The deferred lineage job: ONE action computing every per-partition
-    // counter not already known from the fetch wave (expand counts, and —
-    // uncapped — dedup counts), as a union of narrow aggregates over the
-    // round's persisted intermediates. Memoized by Output; consumers force
-    // it concurrently with the commit wave, so it adds no serial driver
-    // wave to the round.
+    // counter not already known from the fetch wave (expand and dedup
+    // counts), as a union of narrow aggregates over the round's persisted
+    // intermediates. Memoized by Output; consumers force it concurrently
+    // with the commit wave, so it adds no serial driver wave to the round.
     val mkLineage: () => (RoundLineage, Seq[RoundLineage]) = () => {
       val pid = spark_partition_id().as("pid")
-      val rawAgg = rawCandidates.groupBy(pid).agg(count(lit(1)).as("n"))
+      val rows = rawCandidates.groupBy(pid).agg(count(lit(1)).as("n"))
         .select(lit(0).as("src"), col("pid"), col("n"))
-      val plan = enqPartsEager match {
-        case Some(_) => rawAgg
-        case None => rawAgg.unionByName(
-          newEntries.groupBy(pid).agg(count(lit(1)).as("n"))
-            .select(lit(1).as("src"), col("pid"), col("n")))
-      }
-      val rows = plan.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+        .unionByName(newEntries.groupBy(pid).agg(count(lit(1)).as("n"))
+          .select(lit(1).as("src"), col("pid"), col("n")))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
       val rawParts = rows.filter(_._1 == 0).map(t => (t._2, t._3)).toSeq
-      val enqParts = enqPartsEager.getOrElse(
-        rows.filter(_._1 == 1).map(t => (t._2, t._3)).toSeq)
+      val enqParts = rows.filter(_._1 == 1).map(t => (t._2, t._3)).toSeq
       val nRaw = rawParts.map(_._2).sum
       val nEnqueued = enqParts.map(_._2).sum
 
@@ -435,8 +352,7 @@ object CrawlRound {
         popped = nPopped, fetched = nFetched,
         extracted = nFetched, // every 200 page yields an extraction (spec'd noMatch="" otherwise)
         rawCandidates = nRaw, enqueued = nEnqueued,
-        dedupDropped = nRaw - nEnqueued,
-        evicted = nEvicted, readmitted = nReadmitted)
+        dedupDropped = nRaw - nEnqueued)
 
       // Per-partition rows: merge the three per-stage maps on partition id.
       val fetchMap = fetchParts.map(t => t._1 -> (t._2, t._3)).toMap
@@ -455,9 +371,8 @@ object CrawlRound {
     }
 
     Output(pages, popped,
-      State(frontier3, seenExact2, bloomShards2, failed2, cuckooShards2,
-        spilled2, frontierSize2, spilledSize2, failedSize2,
-        seenSize2, bloomCap2),
+      State(frontier2, seenExact2, bloomShards2, failed2, cuckooShards2,
+        failedSize2, seenSize2, bloomCap2),
       nPopped = nPopped,
       cached = (if (fetchSink.isEmpty) Seq(fetched) else Nil) ++
         Seq(popped, remaining, rawCandidates, newEntries),

@@ -19,8 +19,8 @@ object Crawler {
       state: CrawlRound.State,
       lineages: Seq[RoundLineage])
 
-  /** Eager-checkpoint the three state tables CONCURRENTLY — they are
-    * independent jobs, and running them serially adds three job-launch
+  /** Eager-checkpoint the five state tables CONCURRENTLY — they are
+    * independent jobs, and running them serially adds five job-launch
     * latencies to every round (pure driver-side fixed cost that would never
     * amortize, at any cluster size). */
   def checkpointState(s: CrawlRound.State,
@@ -41,11 +41,7 @@ object Crawler {
       ck(s.bloomShards, prev.map(_.bloomShards)),
       ck(s.failed, prev.map(_.failed)),
       ck(s.cuckooShards, prev.map(_.cuckooShards)))), Duration.Inf)
-    val sp = s.spilled.map(df =>
-      if (prev.exists(_.spilled.exists(_ eq df))) df else df.localCheckpoint(true))
-    CrawlRound.State(f, se, bs, fl, cks, sp,
-      s.frontierSize, s.spilledSize, s.failedSize,
-      s.seenSize, s.bloomKeysPerShard)
+    s.copy(frontier = f, seenExact = se, bloomShards = bs, failed = fl, cuckooShards = cks)
   }
 
   def emptySeen(spark: SparkSession): DataFrame = {
@@ -120,9 +116,7 @@ object Crawler {
         frontier = frontier2,
         failed = keep2,
         cuckooShards = cuckoo2,
-        failedSize = if (state.failedSize >= 0) state.failedSize - nRetired else -1L,
-        // re-enqueued count after frontier dedup is data-dependent → unknown
-        frontierSize = -1L)
+        failedSize = state.failedSize - nRetired)
     } finally toRetry.unpersist()
   }
 

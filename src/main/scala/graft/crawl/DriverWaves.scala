@@ -11,7 +11,7 @@ import scala.concurrent.ExecutionContext
   * nested blocking futures, and sizing it is a process-global decision this
   * library must not make for its host application. A small fixed pool of
   * daemon threads is the robust choice. Sizing: the widest wave is the
-  * durable round commit (8 concurrent table commits); one caller (the
+  * durable round commit (6 concurrent table commits); one caller (the
   * bench) additionally runs checkpointState — which spawns ~6 nested
   * futures and BLOCKS on them — inside a pool thread, so the pool must
   * hold a full wave plus its one blocking parent with headroom. 16 covers

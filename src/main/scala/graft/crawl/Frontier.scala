@@ -79,10 +79,10 @@ object Frontier {
   }
 
   /** Exact global top-`n` split by (priority DESC, urlHash ASC) — the
-    * frontier-compaction kernel. A global rank window would funnel the
-    * whole table through one reducer, and a global sort would shuffle the
-    * whole 10^10-row table; instead this is a distributed RADIX SELECT of
-    * the exact n-th composite key:
+    * kernel of the registry query `topk_split_histogram`. A global rank
+    * window would funnel the whole table through one reducer, and a global
+    * sort would shuffle the whole 10^10-row table; instead this is a
+    * distributed RADIX SELECT of the exact n-th composite key:
     *
     *  1. one narrow aggregate histograms the first 16-bit digit of the
     *     (priority DESC, urlHash ASC) radix key (≤ 2^16 rows to the

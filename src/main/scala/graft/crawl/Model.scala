@@ -43,11 +43,7 @@ case class RoundLineage(
     extracted: Long,
     rawCandidates: Long,
     enqueued: Long,
-    dedupDropped: Long,
-    /** Frontier-compaction counters (total row only; eviction is a
-      * round-level policy, not a per-partition stage). */
-    evicted: Long = 0L,
-    readmitted: Long = 0L)
+    dedupDropped: Long)
 
 /** The crawl knobs a caller sets, sized for the sandbox by default. The
   * per-round host budget default is a `CrawlRound.run` argument, and the
@@ -58,17 +54,4 @@ case class CrawlConfig(
     bloomFpp: Double = 0.01,
     /** Salt buckets for the two-phase skew-safe frontier pop (§4.4). */
     saltBuckets: Int = 16,
-    maxDepth: Int = 100,
-    /** Active-frontier size cap. When the frontier outgrows it, the
-      * lowest-priority entries are EVICTED to a spill table (priority-floor
-      * compaction — Frontier.splitTopByPriority) and re-admitted,
-      * highest-priority first, as pops drain the active set below the cap:
-      * a 10^10-URL discovery never grows unbounded state, and no URL is
-      * ever lost (eventual-completeness pinned by FrontierCapSpec). None =
-      * unbounded (the default; small crawls never pay the histogram). */
-    frontierCap: Option[Long] = None) {
-  // cap=0 would strand every enqueued URL in the spill immediately (an
-  // active frontier that can hold nothing never pops, never drains, never
-  // re-admits) — refuse it at construction, not mid-crawl.
-  require(frontierCap.forall(_ >= 1), s"frontierCap must be >= 1, got $frontierCap")
-}
+    maxDepth: Int = 100)

@@ -13,15 +13,15 @@ import graft.fetch.Fetcher
   * run resumes exactly").
   *
   * Round commit protocol: each round's outputs go to their snapshot tables
-  * first (frontier / seen / shards / pages / lineage — each an atomic
-  * pointer swap), then ONE round-log entry records the five table versions,
-  * then the round-log `current` pointer swaps atomically. The round-log
-  * pointer is the linearization point: a kill anywhere before it leaves the
-  * previous round as the visible state, and the re-run — being a pure
-  * function of the committed inputs (deterministic pop order, hash-derived
-  * priorities, no wall clock in the data path) — reproduces byte-identical
-  * outputs. Orphaned table versions from a killed round are unreferenced
-  * and harmless.
+  * first (frontier / seen / shards / failed / cuckoo / pages / lineage —
+  * each an atomic pointer swap), then ONE round-log entry records their
+  * versions, then the round-log `current` pointer swaps atomically. The
+  * round-log pointer is the linearization point: a kill anywhere before it
+  * leaves the previous round as the visible state, and the re-run — being
+  * a pure function of the committed inputs (deterministic pop order,
+  * hash-derived priorities, no wall clock in the data path) — reproduces
+  * byte-identical outputs. Orphaned table versions from a killed round
+  * are unreferenced and harmless.
   *
   * The round log only grows: `init` and `runRounds` each write a NEW
   * entry, and no path rewrites a committed one, so every round owns the
@@ -180,62 +180,44 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
   val failed = new SnapshotTable(spark, root, "failed",
     bucketKey = Some("urlHash"))
   val cuckoo = new SnapshotTable(spark, root, "cuckoo")
-  /** Frontier overflow under cfg.frontierCap — bucketed like the frontier
-    * (the candidate dedup anti-chain joins it too). Only written when a
-    * cap is configured and spill exists. */
-  val spilled = new SnapshotTable(spark, root, "spilled",
-    bucketKey = Some("urlHash"))
   val pages = new SnapshotTable(spark, root, "pages")
   val lineage = new SnapshotTable(spark, root, "lineage")
 
   private val logDir = Paths.get(root, "roundlog")
   private val logPointer = logDir.resolve("current")
 
+  /** One round-log entry: the table versions a round committed (pagesV
+    * and lineageV are -1 for the seed entry, round -1) and the State sizes
+    * that ride the round counters. */
   case class RoundEntry(round: Int, frontierV: Long, seenV: Long, shardsV: Long,
                         failedV: Long, cuckooV: Long,
                         pagesV: Long, lineageV: Long,
-                        spilledV: Long = Long.MinValue,
-                        frontierSize: Long = -1L, spilledSize: Long = -1L,
-                        failedSize: Long = -1L,
-                        seenSize: Long = -1L, bloomKeysPerShard: Long = -1L)
+                        failedSize: Long, seenSize: Long, bloomKeysPerShard: Long)
 
   def lastCompleteRound: Option[Int] =
     if (Files.exists(logPointer)) Some(Files.readString(logPointer).trim.toInt) else None
 
-  /** Round-log format version. v1 had no failedV/cuckooV (the deletable
-    * seen-subset landed later); missing fields read as NO_TABLE so a store
-    * written by the old format resumes with empty failed/cuckoo state
-    * instead of NPE-ing. v3 marked stores whose entries could SHARE a
-    * pagesV (the pages compaction earlier builds ran), so that a v2 reader
-    * fails fast instead of double-reading them. This build writes one
-    * pages version per round and rejects shared versions
-    * (`roundVersions`). Unknown FUTURE versions fail fast with a clear
-    * message rather than misreading fields. */
-  private val FORMAT_VERSION = 3
-  private val NO_TABLE = Long.MinValue
-
-  private def optLong(n: com.fasterxml.jackson.databind.JsonNode, field: String): Long = {
-    val v = n.get(field)
-    if (v == null || v.isNull) NO_TABLE else v.asLong()
-  }
+  /** Round-log format version. Every entry this build writes carries
+    * every RoundEntry field, and this build reads only its own format: an
+    * entry of any other format, or one missing a field, is refused with a
+    * message naming the round and the format or field, never misread. */
+  private val FORMAT_VERSION = 4
 
   private def entry(round: Int): RoundEntry = {
-    val n = mapper.readTree(Files.readString(logDir.resolve(s"round-$round.json")))
-    val fmt = if (n.has("format")) n.get("format").asInt() else 1
-    require(fmt <= FORMAT_VERSION,
-      s"round-$round.json has format $fmt, newer than this build's $FORMAT_VERSION — " +
-        "refusing to misread a future round-log")
-    RoundEntry(n.get("round").asInt(), n.get("frontierV").asLong(),
-      n.get("seenV").asLong(), n.get("shardsV").asLong(),
-      optLong(n, "failedV"), optLong(n, "cuckooV"),
-      n.get("pagesV").asLong(), n.get("lineageV").asLong(),
-      spilledV = optLong(n, "spilledV"),
-      frontierSize = if (n.has("frontierSize")) n.get("frontierSize").asLong() else -1L,
-      spilledSize = if (n.has("spilledSize")) n.get("spilledSize").asLong() else -1L,
-      failedSize = if (n.has("failedSize")) n.get("failedSize").asLong() else -1L,
-      seenSize = if (n.has("seenSize")) n.get("seenSize").asLong() else -1L,
-      bloomKeysPerShard =
-        if (n.has("bloomKeysPerShard")) n.get("bloomKeysPerShard").asLong() else -1L)
+    val file = s"round-$round.json"
+    val n = mapper.readTree(Files.readString(logDir.resolve(file)))
+    val fmt = Option(n.get("format")).map(_.toString).getOrElse("none")
+    require(fmt == FORMAT_VERSION.toString,
+      s"$file has format $fmt; this build reads only round-log format $FORMAT_VERSION")
+    def field(name: String): Long = {
+      val v = n.get(name)
+      require(v != null && v.canConvertToLong,
+        s"$file (format $FORMAT_VERSION) has no numeric field $name")
+      v.asLong()
+    }
+    RoundEntry(field("round").toInt, field("frontierV"), field("seenV"), field("shardsV"),
+      field("failedV"), field("cuckooV"), field("pagesV"), field("lineageV"),
+      field("failedSize"), field("seenSize"), field("bloomKeysPerShard"))
   }
 
   /** Commit a round: write its entry file, then swap `current` to it. Both
@@ -252,12 +234,8 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     node.put("shardsV", e.shardsV)
     node.put("failedV", e.failedV); node.put("cuckooV", e.cuckooV)
     node.put("pagesV", e.pagesV); node.put("lineageV", e.lineageV)
-    if (e.spilledV != NO_TABLE) node.put("spilledV", e.spilledV)
-    if (e.frontierSize >= 0) node.put("frontierSize", e.frontierSize)
-    if (e.spilledSize >= 0) node.put("spilledSize", e.spilledSize)
-    if (e.failedSize >= 0) node.put("failedSize", e.failedSize)
-    if (e.seenSize >= 0) node.put("seenSize", e.seenSize)
-    if (e.bloomKeysPerShard >= 0) node.put("bloomKeysPerShard", e.bloomKeysPerShard)
+    node.put("failedSize", e.failedSize); node.put("seenSize", e.seenSize)
+    node.put("bloomKeysPerShard", e.bloomKeysPerShard)
     val etmp = logDir.resolve(s".round-${e.round}.json.tmp")
     Files.writeString(etmp, node.toString)
     Files.move(etmp, logDir.resolve(s"round-${e.round}.json"),
@@ -274,10 +252,8 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       frontier = frontier.read(e.frontierV),
       seenExact = seen.read(e.seenV),
       bloomShards = shards.read(e.shardsV),
-      failed = if (e.failedV == NO_TABLE) Crawler.emptyFailed(spark) else failed.read(e.failedV),
-      cuckooShards = if (e.cuckooV == NO_TABLE) Crawler.emptyShards(spark) else cuckoo.read(e.cuckooV),
-      spilled = if (e.spilledV == NO_TABLE) None else Some(spilled.read(e.spilledV)),
-      frontierSize = e.frontierSize, spilledSize = e.spilledSize,
+      failed = failed.read(e.failedV),
+      cuckooShards = cuckoo.read(e.cuckooV),
       failedSize = e.failedSize,
       seenSize = e.seenSize, bloomKeysPerShard = e.bloomKeysPerShard)
   }
@@ -295,7 +271,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       failedV = failed.commit(Crawler.emptyFailed(spark)),
       cuckooV = cuckoo.commit(Crawler.emptyShards(spark)),
       pagesV = -1L, lineageV = -1L,
-      spilledSize = 0L, failedSize = 0L, seenSize = 0L))
+      failedSize = 0L, seenSize = 0L, bloomKeysPerShard = -1L))
   }
 
   /** Lineage table rows: partitionId = -1 is the round total; every
@@ -348,25 +324,21 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
         })
       if (res.nPopped == 0) { continue = false }
       else {
-        // The seven table commits are independent single-writer snapshots —
+        // The six table commits are independent single-writer snapshots —
         // run them concurrently (serial parquet-write latencies never
         // amortize). The round-log entry BELOW remains the linearization
         // point: until it swaps, none of these versions are referenced.
         // A table CrawlRound returned BY REFERENCE from the state this
-        // round read (failed/cuckoo on clean rounds, the spill between
-        // compactions) is unchanged — its previous committed version is
-        // REUSED instead of rescanning and rewriting the table, which for
-        // the spill is by design the biggest table in the engine.
+        // round read (failed/cuckoo on clean rounds) is unchanged — its
+        // previous committed version is REUSED instead of rescanning and
+        // rewriting the table.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import graft.crawl.DriverWaves.ec
-        def commitOrReuse(df: org.apache.spark.sql.DataFrame,
-                          prevDf: org.apache.spark.sql.DataFrame,
+        def commitOrReuse(df: DataFrame, prevDf: DataFrame,
                           table: SnapshotTable, prevV: Long): Future[Long] =
-          if ((df eq prevDf) && prevV != NO_TABLE) Future.successful(prevV)
+          if (df eq prevDf) Future.successful(prevV)
           else Future(table.commit(df))
-        val spF = res.state.spilled.map(df =>
-          commitOrReuse(df, state.spilled.orNull, spilled, prevEntry.spilledV))
         // The lineage job CHAINS AFTER the frontier commit instead of
         // racing it: both force the round's expansion/dedup chain through
         // the same unmaterialized persists, and Spark does not coordinate
@@ -387,11 +359,8 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
           Duration.Inf)
         val fv = Await.result(fvF, Duration.Inf)
         val lv = Await.result(lvF, Duration.Inf)
-        val spv = spF.map(Await.result(_, Duration.Inf)).getOrElse(Long.MinValue)
         val e = RoundEntry(r, frontierV = fv, seenV = sv, shardsV = shv,
           failedV = flv, cuckooV = ckv, pagesV = committedPagesV, lineageV = lv,
-          spilledV = spv, frontierSize = res.state.frontierSize,
-          spilledSize = res.state.spilledSize,
           failedSize = res.state.failedSize,
           seenSize = res.state.seenSize,
           bloomKeysPerShard = res.state.bloomKeysPerShard)
@@ -415,45 +384,32 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     r
   }
 
-  /** Round r's committed pages with a `fetchRound` column GUARANTEED: a
-    * store written before the column existed (resume-compat path — the
-    * seenSize/bloomKeysPerShard -1 fallbacks support exactly such stores)
-    * has page versions without it, and a plain union with new-format
-    * versions would throw AnalysisException on the first post-upgrade
-    * round. A pre-column version is by construction exactly round r's
-    * pages, so the round-log entry's round number IS its fetchRound.
-    *
-    * The stored version is the round's FULL fetch log (write-once commit —
-    * all statuses plus the round-internal `links`/`priority`/`popRank`
-    * working columns); `pageView` derives the corpus-facing pages table
-    * from it: status==200 rows, the 12 page columns. Both reductions reach
-    * the parquet scan (pushed status filter, pruned columns), so a corpus
-    * read never pays for the fetch log's extra bytes. Older versions that
-    * stored the filtered projection directly pass through unchanged
-    * (status is all-200 there, and the selected columns are exactly their
-    * schema). */
+  /** The corpus-facing pages table of one committed pages version. The
+    * stored version is the round's FULL fetch log (write-once commit — all
+    * statuses plus the round-internal `links`/`priority` working columns);
+    * this view keeps the status==200 rows and the 12 page columns. Both
+    * reductions reach the parquet scan (pushed status filter, pruned
+    * columns), so a corpus read never pays for the fetch log's extra
+    * bytes. */
   private val PAGE_COLS = Seq("url", "urlHash", "host", "depth", "round",
     "fetchRound", "popRank", "status", "fetchTs", "lang", "itemText", "metrics")
-  private def pageView(df: DataFrame, r: Int): DataFrame = {
-    val stamped = if (df.columns.contains("fetchRound")) df
-                  else df.withColumn("fetchRound", lit(r))
-    stamped.filter(col("status") === 200).select(PAGE_COLS.map(col): _*)
-  }
+  private def pageView(df: DataFrame): DataFrame =
+    df.filter(col("status") === 200).select(PAGE_COLS.map(col): _*)
 
-  /** (round, pagesV) for rounds [lo, hi]. Every round owns the version it
+  /** The pages versions of rounds [lo, hi]. Every round owns the version it
     * committed, so a read takes each one whole. Entries that SHARE a
-    * version come from the pages compaction earlier builds ran: read per
-    * round, the shared rows would come back once per round that points at
+    * version (the layout of a pages compaction, which this build never
+    * runs) would return the shared rows once per round that points at
     * them, so such a store fails fast here instead. */
-  private def roundVersions(lo: Int, hi: Int): Seq[(Int, Long)] = {
+  private def roundVersions(lo: Int, hi: Int): Seq[Long] = {
     val rv = (lo to hi).map(r => (r, entry(r).pagesV))
     val shared = rv.groupBy(_._2).collect { case (v, rs) if rs.size > 1 =>
       s"v$v <- rounds ${rs.map(_._1).mkString(",")}" }
     require(shared.isEmpty,
       s"round-log entries share a pages version (${shared.mkString("; ")}): " +
-        "written by the pages compaction of an earlier build, which this build " +
-        "no longer reads — it expects one pages version per round")
-    rv
+        "a pages compaction layout, which this build does not read — it expects " +
+        "one pages version per round")
+    rv.map(_._2)
   }
 
   /** All RETAINED pages up to the last complete round (the union of the
@@ -461,7 +417,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     * gc() has never run). */
   def allPages(): Option[DataFrame] = lastCompleteRound.filter(_ >= 0).map { last =>
     roundVersions(math.max(0, oldestRetainedRound.get), last)
-      .map { case (r, v) => pageView(pages.read(v), r) }
+      .map(v => pageView(pages.read(v)))
       .reduce(_ unionByName _)
   }
 
@@ -470,7 +426,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     * table versions + round-log entries — the Iceberg expire-snapshots
     * analog for the whole store. A snapshot-per-round state layout is
     * O(rounds × table size) on disk without this; with it, storage is
-    * O(keepLastRounds × table size). Reuse-aware: failed/cuckoo/spill
+    * O(keepLastRounds × table size). Reuse-aware: failed/cuckoo
     * versions committed long ago but still referenced by a KEPT entry
     * (clean rounds reuse them — commitOrReuse) are NOT expired, because
     * each table's expiry floor is the MINIMUM version any kept entry
@@ -483,7 +439,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     val keepFrom = math.max(-1, last - keepLastRounds + 1)
     val kept = (keepFrom to last).map(entry)
     def floor(f: RoundEntry => Long): Option[Long] = {
-      val vs = kept.map(f).filter(v => v != NO_TABLE && v >= 0)
+      val vs = kept.map(f).filter(_ >= 0)
       if (vs.isEmpty) None else Some(vs.min)
     }
     val plan: Seq[(String, SnapshotTable, Option[Long])] = Seq(
@@ -492,7 +448,6 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       ("shards", shards, floor(_.shardsV)),
       ("failed", failed, floor(_.failedV)),
       ("cuckoo", cuckoo, floor(_.cuckooV)),
-      ("spilled", spilled, floor(_.spilledV)),
       ("pages", pages, floor(_.pagesV)),
       ("lineage", lineage, floor(_.lineageV)))
     val removed = plan.map { case (name, t, fl) =>
@@ -517,6 +472,8 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
     *  2. each selected version reads through readPruned("fetchRound") —
     *     the manifest-stats file prune — so a file whose stats fall
     *     outside the slice never reaches a scan (RoundSliceSpec pins it).
+    *     Every pages version this build commits carries `fetchRound` and
+    *     its footer stats, so this is the one read path.
     *
     * None when the store has no complete round or the slice is empty. */
   def pagesInRounds(lo: Int, hi: Int): Option[DataFrame] =
@@ -524,15 +481,9 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
       val l = math.max(lo, math.max(0, oldestRetainedRound.get)) // gc-trimmed floor
       val h = math.min(hi, last)
       if (l > h) None
-      else roundVersions(l, h).map { case (r, v) =>
-        // A pre-fetchRound version can't file-prune on the column (its
-        // files carry no such stats) — but it IS whole-round r's pages and
-        // r ∈ [l, h], so whole-version selection via the round log is the
-        // exact slice; stamp the column so the union stays uniform.
-        if (pages.schemaAt(v).fieldNames.contains("fetchRound"))
-          pageView(pages.readPruned("fetchRound", lo, hi, v), r)
-        else pageView(pages.read(v), r)
-      }.reduceOption(_ unionByName _)
+      else roundVersions(l, h)
+        .map(v => pageView(pages.readPruned("fetchRound", lo, hi, v)))
+        .reduceOption(_ unionByName _)
     }
 
   def currentState(): CrawlRound.State = stateAt(lastCompleteRound.get)

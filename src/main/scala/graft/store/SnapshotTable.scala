@@ -2,6 +2,7 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -83,8 +84,8 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
         df.write.mode("overwrite").parquet(dataDir.toString)
     }
 
-    val files = Files.list(dataDir).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+    val files = Using.resource(Files.list(dataDir))(_.iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString))
 
     // Per-file stats straight from the parquet FOOTERS — no data re-read
     // at commit time (at 100 TB a stats pass that rescans data would double
@@ -144,14 +145,11 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
 
   private def manifest(v: Long): JsonNode = mapper.readTree(Files.readString(manifestPath(v)))
 
-  /** Schema of a committed version, from its manifest (no data I/O) —
-    * lets callers branch on schema evolution (e.g. a column added by a
-    * newer build) before choosing a read path. */
-  def schemaAt(version: Long = -1L): StructType = {
-    val v = if (version >= 0) version else currentVersion.getOrElse(
+  /** The version a read addresses: `version` itself, or the current one
+    * for a negative `version`. */
+  private def resolve(version: Long): Long =
+    if (version >= 0) version else currentVersion.getOrElse(
       throw new IllegalStateException(s"table $name has no committed version"))
-    schemaOf(manifest(v))
-  }
 
   private def schemaOf(m: JsonNode): StructType =
     DataType.fromJson(m.get("schema").asText()).asInstanceOf[StructType]
@@ -171,8 +169,7 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
     * planner and silently break the storage-partitioned anti-joins
     * (already-seen urls slipping through dedup, with no error anywhere). */
   def read(version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion.getOrElse(
-      throw new IllegalStateException(s"table $name has no committed version"))
+    val v = resolve(version)
     val m = manifest(v)
     val schema = schemaOf(m)
     val paths = filesOf(m).map(_.get("path").asText())
@@ -217,8 +214,8 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
         if (Files.exists(mp) && manifest(v).get("bucketKey") != null)
           spark.sql(s"DROP TABLE IF EXISTS ${tableIdent(v)}")
         if (Files.exists(dd))
-          Files.walk(dd).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
+          Using.resource(Files.walk(dd))(_.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => Files.deleteIfExists(p)))
         Files.deleteIfExists(mp)
         removed += v
       }
@@ -231,26 +228,21 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
     * `column` intersects [lo, hi] (the poor-man's Iceberg metadata prune —
     * §4.5). */
   def readPruned(column: String, lo: Long, hi: Long, version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else currentVersion.get
-    val m = manifest(v)
+    val m = manifest(resolve(version))
     val schema = schemaOf(m)
-    val paths = filesOf(m).filter { f =>
-      val s = f.get("stats")
-      if (s == null || s.get(column) == null) true // no stats → can't prune
-      else {
-        val cmin = s.get(column).get("min").asText().toDouble
-        val cmax = s.get(column).get("max").asText().toDouble
-        cmax >= lo && cmin <= hi
-      }
-    }.map(_.get("path").asText())
+    val paths = prunedFiles(m, column, lo, hi).map(_.get("path").asText())
     if (paths.isEmpty) emptyDf(schema)
     else spark.read.schema(schema).parquet(paths: _*).filter(col(column).between(lo, hi))
   }
 
   /** How many data files the pruned read would touch (plan-shape tests). */
-  def prunedFileCount(column: String, lo: Long, hi: Long): Int = {
-    val m = manifest(currentVersion.get)
-    filesOf(m).count { f =>
+  def prunedFileCount(column: String, lo: Long, hi: Long): Int =
+    prunedFiles(manifest(resolve(-1L)), column, lo, hi).size
+
+  /** The manifest's files whose `column` stats intersect [lo, hi]; a file
+    * without stats for it can't be pruned. */
+  private def prunedFiles(m: JsonNode, column: String, lo: Long, hi: Long): Seq[JsonNode] =
+    filesOf(m).filter { f =>
       val s = f.get("stats")
       s == null || s.get(column) == null || {
         val cmin = s.get(column).get("min").asText().toDouble
@@ -258,7 +250,6 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
         cmax >= lo && cmin <= hi
       }
     }
-  }
 
   private def numeric(v: Any): Double = v match {
     case n: java.lang.Number => n.doubleValue()

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.expr.PriorityBucket
 
-/** The frontier-compaction radix select (Frontier.splitTopByPriority):
-  * a priority FLOOD — millions of rows in one priority quantization cell,
+/** The radix select behind the registry's `topk_split_histogram`
+  * (Frontier.splitTopByPriority): an exact deterministic top-n, and a
+  * priority FLOOD — millions of rows in one priority quantization cell,
   * the case that used to fall to an RDD sort path / a multi-MB driver key
   * collect — must now resolve through extra 16-bit digit levels with a
   * bounded driver footprint and no sort anywhere in the plan. */
@@ -78,5 +79,23 @@ class RadixSelectSpec extends AnyFunSuite {
       top.select("urlHash").collect().map(_.getLong(0)).toSet
     }
     assert(run(3) == run(17))
+  }
+
+  test("splitTopByPriority is an exact deterministic top-n at any partitioning") {
+    import spark.implicits._
+    // unique urlHash (odd multiplier, no mod) — ties in priority are
+    // broken by hash, so the expected order is total
+    val rows = (0L until 5000L)
+      .map(i => (s"u$i", i * 2654435761L, s"h${i % 7}",
+        (i % 997).toDouble / 997.0, 1, 0))
+    val df = rows.toDF("url", "urlHash", "host", "priority", "depth", "round")
+    val expected = rows.sortBy(r => (-r._4, r._2)).take(1234)
+      .map(_._2).sorted
+    for (parts <- Seq(1, 7)) {
+      val (top, rest, nRest) = Frontier.splitTopByPriority(df.repartition(parts), 1234L)
+      assert(top.count() == 1234 && nRest == 5000 - 1234)
+      assert(top.select("urlHash").collect().map(_.getLong(0)).sorted.toSeq == expected.toSeq)
+      assert(rest.count() == 5000 - 1234)
+    }
   }
 }

@@ -86,60 +86,6 @@ class KillResumeSpec extends AnyFunSuite {
     }
   }
 
-  test("capped durable crawl kill-resumes byte-identical, spill table included") {
-    val (budgets, default) = budgetsAndDefault
-    val cfg = CrawlFixture.cfg.copy(frontierCap = Some(120L))
-
-    val rootA = Files.createTempDirectory("crawlCapA").toString
-    val a = new DurableCrawler(spark, rootA, cfg)
-    a.init(seeds, robots)
-    a.runRounds(3, fetcher, robots, budgets, default)
-
-    val rootB = Files.createTempDirectory("crawlCapB").toString
-    val b1 = new DurableCrawler(spark, rootB, cfg)
-    b1.init(seeds, robots)
-    intercept[RuntimeException] {
-      b1.runRounds(3, fetcher, robots, budgets, default, failBeforeLogAt = 2)
-    }
-    b1.close()
-    val b2 = new DurableCrawler(spark, rootB, cfg)
-    b2.runRounds(3, fetcher, robots, budgets, default)
-
-    val stA = a.currentState(); val stB = b2.currentState()
-    assert(stA.frontier.count() <= 120L)
-    assert(stA.spilled.isDefined, "cap fixture must actually spill")
-    assert(sortedRows(stA.frontier) == sortedRows(stB.frontier))
-    assert(sortedRows(stA.spilled.get) == sortedRows(stB.spilled.get))
-    assert(sortedRows(stA.seenExact) == sortedRows(stB.seenExact))
-    assert(stA.frontierSize == stB.frontierSize && stA.spilledSize == stB.spilledSize)
-  }
-
-  test("v1 round-log (no failedV/cuckooV fields) resumes with empty deletable state, no NPE") {
-    val (budgets, default) = budgetsAndDefault
-    val root = Files.createTempDirectory("crawlV1").toString
-    val d = new DurableCrawler(spark, root, CrawlFixture.cfg)
-    d.init(seeds, robots)
-    d.runRounds(1, fetcher, robots, budgets, default)
-    d.close()
-    // Rewrite every round-log entry to the v1 shape: strip the format tag
-    // and the failedV/cuckooV fields the old format never wrote.
-    val logDir = java.nio.file.Paths.get(root, "roundlog")
-    Files.list(logDir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("round-")).foreach { p =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val n = mapper.readTree(Files.readString(p))
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        n.remove("format"); n.remove("failedV"); n.remove("cuckooV")
-        Files.writeString(p, n.toString)
-      }
-    val resumed = new DurableCrawler(spark, root, CrawlFixture.cfg)
-    assert(resumed.lastCompleteRound.contains(1))
-    val st = resumed.currentState() // v2 reader on v1 entries: must not NPE
-    assert(st.failed.count() == 0L && st.cuckooShards.count() == 0L)
-    resumed.runRounds(2, fetcher, robots, budgets, default) // and keeps crawling
-    assert(resumed.lastCompleteRound.contains(2))
-  }
-
   test("a FUTURE round-log format is refused with a clear message, not misread") {
     val (budgets, default) = budgetsAndDefault
     val root = Files.createTempDirectory("crawlVN").toString
@@ -148,13 +94,21 @@ class KillResumeSpec extends AnyFunSuite {
     d.runRounds(0, fetcher, robots, budgets, default)
     val p = java.nio.file.Paths.get(root, "roundlog", "round-0.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(Files.readString(p))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    n.put("format", 99)
-    Files.writeString(p, n.toString)
-    val resumed = new DurableCrawler(spark, root, CrawlFixture.cfg)
-    val e = intercept[IllegalArgumentException] { resumed.currentState() }
-    assert(e.getMessage.contains("format 99"))
+    val written = Files.readString(p)
+    def refusal(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
+      val n = mapper.readTree(written)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      edit(n)
+      Files.writeString(p, n.toString)
+      val resumed = new DurableCrawler(spark, root, CrawlFixture.cfg)
+      intercept[IllegalArgumentException] { resumed.currentState() }.getMessage
+    }
+    assert(refusal(_.put("format", 99)).contains("format 99"))
+    // an older format is refused too: this build reads only its own
+    assert(refusal(_.put("format", 3)).contains("format 3"))
+    // a current-format entry missing a field names the round and the field
+    val missing = refusal(_.remove("seenV"))
+    assert(missing.contains("round-0.json") && missing.contains("seenV"), missing)
   }
 
   test("durable run reproduces the in-memory crawler's seen set") {

@@ -65,42 +65,6 @@ class RoundSliceSpec extends AnyFunSuite {
     assert(crawler.pages.readPruned("fetchRound", 2, 2, v2).count() > 0)
   }
 
-  test("a pre-fetchRound pages version (old-build store) still reads via allPages and pagesInRounds") {
-    import org.apache.spark.sql.functions.col
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.selectExpr(df.columns.sorted.toSeq: _*).collect().map(_.toString).sorted.toSeq
-    val expectAll = rows(crawler.allPages().get)
-    val expectR0 = rows(crawler.pagesInRounds(0, 0).get)
-    val expectR1 = rows(crawler.pagesInRounds(1, 1).get)
-    val v1 = crawler.pagesVersionAt(1)
-
-    // Old-store shapes, each committed as a new pages version that the
-    // round log's pagesV is repointed at (the round log is the only
-    // reference — data-file immutability is preserved):
-    //  - round 0 as written by a build that predates the fetchRound column
-    //    (a column-less copy);
-    //  - round 1 as written before the write-once commit: the filtered
-    //    projection (status 200, the 12 page columns, no links).
-    repoint(0, crawler.pages.commit(
-      crawler.pages.read(crawler.pagesVersionAt(0)).drop("fetchRound")))
-    repoint(1, crawler.pages.commit(crawler.pages.read(v1)
-      .filter(col("status") === 200)
-      .select(Seq("url", "urlHash", "host", "depth", "round", "fetchRound", "popRank",
-        "status", "fetchTs", "lang", "itemText", "metrics").map(col): _*)))
-
-    // allPages: the old versions union with new-format rounds (no
-    // AnalysisException), fetchRound coalesced from the round-log round.
-    assert(rows(crawler.allPages().get) == expectAll)
-    // pagesInRounds: whole-version selection for the column-less round,
-    // the usual file prune for the projected one — both exact.
-    val r0 = crawler.pagesInRounds(0, 0).get
-    assert(rows(r0) == expectR0)
-    assert(r0.select("fetchRound").distinct().collect().map(_.getInt(0)).toSeq == Seq(0))
-    assert(rows(crawler.pagesInRounds(1, 1).get) == expectR1)
-    // a slice excluding round 0 must not read the column-less version at all
-    assert(crawler.pagesInRounds(1, 2).get.filter(col("fetchRound") === 0).count() == 0)
-  }
-
   test("rounds sharing a pages version (a compacted store) fail fast on read") {
     val v1 = crawler.pagesVersionAt(1)
     repoint(1, crawler.pagesVersionAt(0))

@@ -31,6 +31,15 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(back.columns.toSeq == Seq("k", "s"))
   }
 
+  test("a table with no commit refuses every read with one message") {
+    val t = new SnapshotTable(spark, tmpRoot(), "t")
+    for (read <- Seq(() => t.read(), () => t.readPruned("k", 0, 1),
+                     () => t.prunedFileCount("k", 0, 1))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage == "table t has no committed version")
+    }
+  }
+
   test("manifest stats prune files by range") {
     val t = new SnapshotTable(spark, tmpRoot(), "t")
     // 8 files, each covering a disjoint k range
