@@ -65,13 +65,16 @@ object CrawlRound {
     *
     * `lineage` is the round-total row (partitionId = -1); `partLineage`
     * carries one row per physical partition id with ALL counters. Forcing
-    * either runs the round's single DEFERRED counting job (memoized) over
-    * the persisted intermediates — so callers that consume lineage (the
-    * durable commit, specs) pay one fused job, callers that only crawl
-    * (the bench loop) pay none, and either way the raw/enqueued counts
-    * never add serial driver waves between the fetch and the commit.
-    * Force lineage BEFORE unpersistCached(), or the fused job recomputes
-    * the round.
+    * either runs the round's DEFERRED counting action (memoized): one
+    * collect over the persisted intermediates, which AQE runs as three
+    * jobs (a map stage per aggregate, then the result). Callers that
+    * consume lineage (the durable commit, the in-memory crawler, specs)
+    * force it after the frontier commit or checkpoint, so it scans that
+    * write's cached intermediates instead of recomputing them; callers
+    * that only crawl (the bench loop) pay nothing. Either way the
+    * raw/enqueued counts add no driver wave between the fetch and the
+    * commit. Force lineage BEFORE unpersistCached(), or the action
+    * recomputes the round.
     *
     * The stages partition independently, so partition p's popped/fetched
     * (fetch-stage partitions) and rawCandidates/enqueued (expand/dedup
@@ -293,7 +296,7 @@ object CrawlRound {
     // whole fetch wave by now. NO count job here: the expansion
     // materializes inside whichever downstream action runs first (the
     // caller's state checkpoint / commits), and its per-partition counts
-    // ride the single deferred lineage job — a serial expand-count wave
+    // ride the deferred lineage action — a serial expand-count wave
     // was pure per-round driver fixed cost (the Amdahl fraction the
     // scaling bench exposes).
     // failedSize after this round's failures (arithmetic).
@@ -330,11 +333,12 @@ object CrawlRound {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val frontier2 = remaining.unionByName(newEntries)
 
-    // The deferred lineage job: ONE action computing every per-partition
-    // counter not already known from the fetch wave (expand and dedup
-    // counts), as a union of narrow aggregates over the round's persisted
-    // intermediates. Memoized by Output; consumers force it concurrently
-    // with the commit wave, so it adds no serial driver wave to the round.
+    // The deferred lineage action: ONE collect computing every
+    // per-partition counter not already known from the fetch wave (expand
+    // and dedup counts), as a union of narrow aggregates over the round's
+    // persisted intermediates. Memoized by Output; consumers force it
+    // after the frontier write has filled those persists (Output
+    // scaladoc).
     val mkLineage: () => (RoundLineage, Seq[RoundLineage]) = () => {
       val pid = spark_partition_id().as("pid")
       val rows = rawCandidates.groupBy(pid).agg(count(lit(1)).as("n"))

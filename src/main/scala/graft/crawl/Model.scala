@@ -47,7 +47,8 @@ case class RoundLineage(
 
 /** The crawl knobs a caller sets, sized for the sandbox by default. The
   * per-round host budget default is a `CrawlRound.run` argument, and the
-  * durable state tables keep SnapshotTable's bucket count. */
+  * durable state tables bucket at the session's shuffle-partition count,
+  * which each version's manifest records (SnapshotTable). */
 case class CrawlConfig(
     nShards: Int = 16,
     expectedKeysPerShard: Long = 1L << 16,

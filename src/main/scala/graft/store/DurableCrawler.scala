@@ -170,8 +170,9 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
   // ---------------------------------------------------------------------
 
   // The three tables every round anti-joins against are hash-bucketed by
-  // urlHash: their committed scans arrive pre-partitioned, so the per-round
-  // dedup joins exchange ONLY the small candidate side (see CrawlRound).
+  // urlHash, at the session's shuffle-partition count: their committed
+  // scans arrive pre-partitioned, so the per-round dedup joins exchange
+  // ONLY the small candidate side (see CrawlRound).
   val frontier = new SnapshotTable(spark, root, "frontier",
     bucketKey = Some("urlHash"))
   val seen = new SnapshotTable(spark, root, "seen",
@@ -276,11 +277,11 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
 
   /** Lineage table rows: partitionId = -1 is the round total; every
     * partitionId ≥ 0 row carries ALL counters for that physical partition.
-    * Forcing out.lineage here runs the round's single deferred counting
-    * job (CrawlRound.Output scaladoc) — this is called inside the commit
-    * wave's lineage future, so the count rides CONCURRENTLY with the
-    * table commits instead of as its own serial driver wave. */
-  private def lineageDf(out: CrawlRound.Output, r: Int): DataFrame = {
+    * Forcing out.lineage here runs the round's deferred counting action
+    * (CrawlRound.Output scaladoc). runRounds calls this once the frontier
+    * commit has finished, so the count reads that commit's cached
+    * intermediates while the other table commits may still be running. */
+  private def lineageDf(out: CrawlRound.Output): DataFrame = {
     import spark.implicits._
     (out.lineage +: out.partLineage).toDF()
   }
@@ -350,7 +351,7 @@ class DurableCrawler(spark: SparkSession, val root: String, cfg: CrawlConfig = C
         // narrow cached-scan aggregations. Still fully inside the commit
         // wave — the other table commits overlap the chain.
         val fvF = Future(frontier.commit(res.state.frontier))
-        val lvF = fvF.map(_ => lineage.commit(lineageDf(res, r)))
+        val lvF = fvF.map(_ => lineage.commit(lineageDf(res)))
         val Seq(sv, shv, flv, ckv) = Await.result(Future.sequence(Seq(
           Future(seen.commit(res.state.seenExact)),
           Future(shards.commit(res.state.bloomShards)),

@@ -28,10 +28,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
   * atomic move of a temp pointer onto `current`. A crash before the final
   * move leaves the table at vN-1 with only unreferenced orphan files — a
   * re-run overwrites them; readers never see a torn state.
+  *
+  * A table with a `bucketKey` commits each version hash-bucketed by it,
+  * into as many buckets as the session's shuffle-partition count at commit
+  * time (one write task and one file per bucket), and records that count
+  * in the version's manifest; `read` registers each version with its own
+  * manifest's count.
   */
 class SnapshotTable(spark: SparkSession, root: String, val name: String,
-                    val bucketKey: Option[String] = None,
-                    val nBuckets: Int = 32) {
+                    val bucketKey: Option[String] = None) {
   private val mapper = new ObjectMapper()
   private val tableDir = Paths.get(root, name)
   private val metaDir = tableDir.resolve("metadata")
@@ -66,6 +71,10 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
   def commit(df: DataFrame): Long = {
     val v = currentVersion.map(_ + 1).getOrElse(0L)
     val dataDir = tableDir.resolve(s"data/v$v")
+    // The session's shuffle width: the probe side of a join against this
+    // version shuffles to the bucket count, so a count matched to the
+    // session's cores never fans a small probe out wider than the box.
+    val nBuckets = spark.sessionState.conf.numShufflePartitions
     bucketKey match {
       case Some(k) =>
         // Hash-bucketed storage (the Iceberg bucket-transform stand-in):
@@ -163,8 +172,8 @@ class SnapshotTable(spark: SparkSession, root: String, val name: String,
     * The bucket layout comes from the MANIFEST of the version being read,
     * never from this handle's configuration: a version written before
     * bucketing existed (plain parquet, no bucket suffix in the file names)
-    * must read as plain parquet, and a version written with a different
-    * `nBuckets` must register with ITS bucket count — a wrong
+    * must read as plain parquet, and a version committed under a different
+    * shuffle-partition count must register with ITS bucket count — a wrong
     * CLUSTERED BY registration would report false HashPartitioning to the
     * planner and silently break the storage-partitioned anti-joins
     * (already-seen urls slipping through dedup, with no error anywhere). */

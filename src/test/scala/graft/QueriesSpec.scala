@@ -52,12 +52,10 @@ class QueriesSpec extends AnyFunSuite {
     test(s"query $name is partitioning-independent") {
       val q = SparkEntry.registry.find(_.name == name).get
       val a = q.run(spark, sf).collect().map(_.toString).toSeq
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "13")
-        val b = q.run(spark, sf).collect().map(_.toString).toSeq
-        assert(a == b, s"$name output changed with partition count")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      val b = TestSpark.withShufflePartitions(13) {
+        q.run(spark, sf).collect().map(_.toString).toSeq
+      }
+      assert(a == b, s"$name output changed with partition count")
     }
   }
 }

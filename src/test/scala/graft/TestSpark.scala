@@ -17,5 +17,13 @@ object TestSpark {
     .getOrCreate()
   spark.sparkContext.setLogLevel("ERROR")
 
+  /** Runs `f` with the session's shuffle-partition count set to `n`, then
+    * restores the previous count. */
+  def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
 }

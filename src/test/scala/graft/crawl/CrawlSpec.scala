@@ -31,13 +31,11 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("crawl is partition-count independent (the real determinism gate)") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
+    TestSpark.withShufflePartitions(13) {
       val res13 = CrawlFixture.runCrawl(spark)
       assert(Crawler.popSequence(res13.popLog) == popSeq)
       assert(Crawler.seenDump(res13.state) == seen)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("robots: no /private/ URL is ever popped") {

@@ -3,9 +3,12 @@ package graft.store
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.withShufflePartitions
 import graft.crawl.{CrawlFixture, Crawler, Robots}
 import graft.fetch.CorpusFetcher
 import graft.fixtures.SyntheticCorpus
@@ -64,6 +67,73 @@ class KillResumeSpec extends AnyFunSuite {
       sortedRows(b2.allPages().get.drop("metrics")))
     assert(sortedRows(a.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")) ==
       sortedRows(b2.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")))
+  }
+
+  test("a store resumed at another shuffle parallelism crawls exactly as an uninterrupted run") {
+    val (budgets, default) = budgetsAndDefault
+    // Three seed pages are missing: round 0 fails them into `failed`, and
+    // the failure-free rounds after it carry that version forward
+    // (commitOrReuse), so the resumed rounds anti-join a `failed` version
+    // bucketed at the first session's width next to seen/frontier
+    // versions bucketed at the second's.
+    val missing = seeds.take(3)
+    val gappy = new CorpusFetcher(() => {
+      import spark.implicits._
+      SyntheticCorpus.pages(spark, CrawlFixture.N_URLS, nHosts = CrawlFixture.N_HOSTS).toDF()
+        .filter(!col("url").isin(missing: _*))
+    })
+
+    val rootA = Files.createTempDirectory("crawlP4").toString
+    val a = new DurableCrawler(spark, rootA, CrawlFixture.cfg)
+    withShufflePartitions(4) {
+      a.init(seeds, robots)
+      a.runRounds(4, gappy, robots, budgets, default)
+    }
+    val rootB = Files.createTempDirectory("crawlP4to13").toString
+    val b1 = new DurableCrawler(spark, rootB, CrawlFixture.cfg)
+    withShufflePartitions(4) {
+      b1.init(seeds, robots)
+      b1.runRounds(2, gappy, robots, budgets, default)
+    }
+    b1.close()
+    val b2 = new DurableCrawler(spark, rootB, CrawlFixture.cfg)
+    withShufflePartitions(13)(b2.runRounds(4, gappy, robots, budgets, default))
+    assert(a.lastCompleteRound.contains(4) && b2.lastCompleteRound.contains(4))
+
+    // pop sequence (every fetch, failed ones too), seen set and pages
+    def pops(d: DurableCrawler): Seq[String] = (0 to 4).flatMap { r =>
+      sortedRows(d.pages.read(d.pagesVersionAt(r))
+        .select("fetchRound", "host", "popRank", "url", "status"))
+    }
+    assert(pops(a) == pops(b2))
+    assert(Crawler.seenDump(a.currentState()) == Crawler.seenDump(b2.currentState()))
+    assert(sortedRows(a.allPages().get.drop("metrics")) ==
+      sortedRows(b2.allPages().get.drop("metrics")))
+    assert(sortedRows(a.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")) ==
+      sortedRows(b2.allPages().get.selectExpr("urlHash", "map_entries(metrics) as me")))
+
+    // every bucketed version's manifest names the width it was committed
+    // at: versions the rounds up to 2 reference were written at 4, any
+    // other version rounds 3-4 reference was written at 13
+    val mapper = new ObjectMapper()
+    def logEntry(r: Int) = mapper.readTree(
+      Files.readString(java.nio.file.Paths.get(rootB, "roundlog", s"round-$r.json")))
+    def bucketsOf(table: String, v: Long): Int = mapper.readTree(Files.readString(
+      java.nio.file.Paths.get(rootB, table, "metadata", s"v$v.json"))).get("nBuckets").asInt()
+    for ((table, field) <- Seq("frontier" -> "frontierV", "seen" -> "seenV",
+                               "failed" -> "failedV")) {
+      val at4 = (-1 to 2).map(r => logEntry(r).get(field).asLong()).toSet
+      at4.foreach(v => assert(bucketsOf(table, v) == 4, s"$table v$v"))
+      for (r <- 3 to 4; v = logEntry(r).get(field).asLong())
+        assert(bucketsOf(table, v) == (if (at4(v)) 4 else 13), s"$table v$v (round $r)")
+    }
+    // the mix the test is for: the resumed rounds carried forward a
+    // non-empty `failed` written at 4 while writing `seen` at 13
+    val last = logEntry(4)
+    assert(last.get("failedSize").asLong() > 0, "no fetch failed: the test lost its gap")
+    assert(bucketsOf("failed", last.get("failedV").asLong()) == 4)
+    assert(bucketsOf("seen", last.get("seenV").asLong()) == 13)
+    a.close(); b2.close()
   }
 
   test("lineage carries ALL counters for every partitionId >= 0, summing to the totals") {

@@ -58,31 +58,35 @@ class SnapshotTableSpec extends AnyFunSuite {
     // v0 written PRE-bucketing (plain parquet, no bucket metadata)
     val plain = new SnapshotTable(spark, root, "t")
     plain.commit(Seq((1L, "a"), (2L, "b")).toDF("urlHash", "s"))
-    // v1 written with 4 buckets
-    val b4 = new SnapshotTable(spark, root, "t", bucketKey = Some("urlHash"), nBuckets = 4)
-    b4.commit(Seq((3L, "c"), (4L, "d")).toDF("urlHash", "s"))
-    // resume through a handle configured with a DIFFERENT bucket count:
-    // v0 must read as plain parquet (no 'Invalid bucket file'), v1 must
-    // register with ITS four buckets — a false 8-bucket HashPartitioning
-    // would silently break the storage-partitioned anti-joins
-    val b8 = new SnapshotTable(spark, root, "t", bucketKey = Some("urlHash"), nBuckets = 8)
-    assert(b8.read(0L).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    val v1 = b8.read(1L)
-    assert(v1.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
-    // a groupBy on the bucket key must be satisfied by the scan's
-    // HashPartitioning — and with the manifest's 4 buckets, not the
-    // handle's 8 (a false 8-bucket claim would also skip the shuffle,
-    // but distribute rows wrongly; the count check above catches rows,
-    // this pins the partitioning source)
-    val agg = v1.groupBy("urlHash").count()
-    agg.collect()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.linesIterator.exists(_.contains("ShuffleQueryStage")),
-      s"bucketed scan must satisfy the aggregate distribution:\n$plan")
-    assert(plan.contains("Bucketed: true"),
-      s"scan must actually run bucketed:\n$plan")
-    assert(agg.rdd.getNumPartitions == 4,
-      s"aggregate must run at the manifest's 4 buckets, got ${agg.rdd.getNumPartitions}")
+    // v1 written with 4 buckets: the session's shuffle width at commit
+    val b4 = new SnapshotTable(spark, root, "t", bucketKey = Some("urlHash"))
+    TestSpark.withShufflePartitions(4) {
+      b4.commit(Seq((3L, "c"), (4L, "d")).toDF("urlHash", "s"))
+    }
+    // resume in a session whose shuffle width is a DIFFERENT 8: v0 must
+    // read as plain parquet (no 'Invalid bucket file'), v1 must register
+    // with ITS four buckets — a false 8-bucket HashPartitioning would
+    // silently break the storage-partitioned anti-joins
+    TestSpark.withShufflePartitions(8) {
+      val resumed = new SnapshotTable(spark, root, "t", bucketKey = Some("urlHash"))
+      assert(resumed.read(0L).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+      val v1 = resumed.read(1L)
+      assert(v1.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+      // a groupBy on the bucket key must be satisfied by the scan's
+      // HashPartitioning — and with the manifest's 4 buckets, not the
+      // session's 8 (a false 8-bucket claim would also skip the shuffle,
+      // but distribute rows wrongly; the count check above catches rows,
+      // this pins the partitioning source)
+      val agg = v1.groupBy("urlHash").count()
+      agg.collect()
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(!plan.linesIterator.exists(_.contains("ShuffleQueryStage")),
+        s"bucketed scan must satisfy the aggregate distribution:\n$plan")
+      assert(plan.contains("Bucketed: true"),
+        s"scan must actually run bucketed:\n$plan")
+      assert(agg.rdd.getNumPartitions == 4,
+        s"aggregate must run at the manifest's 4 buckets, got ${agg.rdd.getNumPartitions}")
+    }
   }
 
   test("binary and map columns survive the round-trip") {
